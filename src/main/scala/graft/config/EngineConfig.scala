@@ -79,8 +79,8 @@ final case class EngineConfig(
     /** `iceberg.control.commit.interval-ms` (default 300 000,
       * IcebergSinkConfig.java:88-89) */
     commitIntervalMs: Long = 300000L,
-    /** `iceberg.control.commit.threads` — size of the multi-table parallel
-      * commit pool (default cores×2, IcebergSinkConfig.java:92,229-233). */
+    /** `iceberg.control.commit.threads` — most tables one multi-table
+      * commit writes at once (default cores×2, IcebergSinkConfig.java:92,229-233). */
     commitThreads: Int = Runtime.getRuntime.availableProcessors() * 2,
     /** `iceberg.control.commit.timeout-ms` — accepted for config-file
       * compatibility (default 30 000, IcebergSinkConfig.java:90-91) but

@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 
+import graft.operators.HotPath
+
 /** Benchmark decontamination: flag corpus documents that share word
   * n-grams with a benchmark/eval set — the standard pre-training hygiene
   * pass that keeps test data out of the training corpus (the n-gram
@@ -225,14 +227,6 @@ object Decontaminate {
     val benchNg = benchmark
       .select(col(idCol).as("b_id"), explode(Dedup.shingles(col(textCol), n)).as("ng"))
       .localCheckpoint() // feeds the Bloom build AND the exact index
-    // the Bloom build and the exact-index write are INDEPENDENT jobs over
-    // the same pinned blocks — overlap them (guide §2.6); the bitmap is
-    // only consumed by the meta publish below, which awaits it, so the
-    // crash-atomic publish order (tables first, meta LAST) is unchanged
-    val bfF = scala.concurrent.Future {
-      org.apache.spark.sql.SparkSession.setActiveSession(spark)
-      buildBloom(benchNg, fpp).orNull
-    }(graft.sink.IceTableWriter.sideJobEc)
     // crash-atomic publish: the exact index stages under a fresh
     // generation dir and the meta row (which carries the Bloom bitmap AND
     // the generation pointer) commits LAST — a crash mid-rebuild can
@@ -242,9 +236,13 @@ object Decontaminate {
     // the spare for in-flight probes is the generation the CURRENT meta
     // points at — snapshot it BEFORE the meta overwrite below
     val prevGen = IndexLayout.publishedGen(benchNg.sparkSession, dir)
-    benchNg.groupBy("ng").agg(min("b_id").as("first_benchmark_id"))
-      .write.mode("overwrite").parquet(s"$dir/$gen/ngrams.parquet")
-    val bf = scala.concurrent.Await.result(bfF, scala.concurrent.duration.Duration.Inf)
+    // the Bloom build and the exact-index write are INDEPENDENT jobs over
+    // the same pinned blocks — overlap them (guide §2.6); meta still last
+    val (bf, _) = HotPath.overlap("decontamination Bloom build", spark)(
+      buildBloom(benchNg, fpp).orNull) {
+      benchNg.groupBy("ng").agg(min("b_id").as("first_benchmark_id"))
+        .write.mode("overwrite").parquet(s"$dir/$gen/ngrams.parquet")
+    }
     IndexLayout.publishMeta(dir) { path =>
       Seq((n, LayoutVersion, bf, gen)).toDF("n", "layout", "bf", "gen")
         .repartition(1)

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.fs.ControlFs
+import graft.operators.HotPath
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -458,30 +459,22 @@ object IvfIndex {
     val dim = Similarity.detectDim(c)
     // Both branches: the tiny geometry writes (driver-held centroids /
     // supers, one small file each) are independent of the corpus-sized
-    // assignments write — submit them from a driver thread so their
-    // per-job floor overlaps the big write instead of preceding it
-    // (guide §2.6); awaited before return, so the staged-generation
+    // assignments write — overlap them so their per-job floor hides under
+    // the big write (guide §2.6); both finish before return, so the
     // publish order (meta LAST, outside this method) is unchanged.
     // The assignments cluster by cell via an AQE REBALANCE (guide §6) —
     // a plain repartition(col) pinned every cell to one fixed task (32
     // fixed tasks at any input size, a hot cell serializing its rows);
     // the rebalance coalesces tiny cells into few write tasks and
     // range-splits a skewed cell, same one-cell-per-file clustering.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    def sideWrite(body: => Unit): Future[Unit] = Future {
-      org.apache.spark.sql.SparkSession.setActiveSession(spark)
-      body
-    }(graft.sink.IceTableWriter.sideJobEc)
     if (nCells <= twoLevelGate) {
       val cents = Similarity.trainCentroids(c, nCells, kmeansIters, dim)
-      val geomF = sideWrite {
+      HotPath.overlap("IVF geometry write", spark) {
         cents.toSeq.map { case (id, v) => (id, v.toSeq) }
           .toDF("c_id", "c_vec")
           .repartition(1)
           .write.mode("overwrite").parquet(s"$stage/centroids.parquet")
-      }
-      try {
+      } {
         if (cents.nonEmpty) {
           c.withColumn("c_id", Similarity.nearestCentroid(col("n_vec"), cents).getField("c_id"))
             .select("n_id", "n_vec", "c_id")
@@ -489,19 +482,18 @@ object IvfIndex {
             .hint("rebalance", col("c_id"))
             .write.mode("overwrite").partitionBy("c_id").parquet(s"$stage/assignments.parquet")
         }
-      } finally Await.result(geomF, Duration.Inf)
+      }
       cents.length
     } else {
       val (supers, cells0) = trainTwoLevel(c, nCells, kmeansIters, dim)
       val cells = cells0.localCheckpoint() // feeds the write, the routing join, and the count
-      val geomF = sideWrite {
+      HotPath.overlap("IVF geometry write", spark) {
         spark.createDataset(supers.toSeq.map { case (id, v) => (id, v.toSeq) })
           .toDF("s_id", "s_vec")
           .repartition(1)
           .write.mode("overwrite").parquet(s"$stage/supers.parquet")
         cells.repartition(1).write.mode("overwrite").parquet(s"$stage/centroids.parquet")
-      }
-      try {
+      } {
         val n = cells.count()
         if (n > 0) {
           assignTwoLevel(c, supersWithCells(spark, cells, supers), groupCells(cells))
@@ -509,7 +501,7 @@ object IvfIndex {
             .write.mode("overwrite").partitionBy("c_id").parquet(s"$stage/assignments.parquet")
         }
         n.toInt
-      } finally Await.result(geomF, Duration.Inf)
+      }._2
     }
   }
 

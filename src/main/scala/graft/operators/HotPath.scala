@@ -1,37 +1,32 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.{CompletableFuture, ConcurrentLinkedQueue, ExecutionException, ExecutorService, Executors, TimeUnit, TimeoutException}
+import java.util.concurrent.atomic.AtomicInteger
 
-/** Hot-path materialization policy for the engine's per-batch pipelines
-  * (the CDC resolve and the streaming dedup shells), where one frame
-  * feeds several downstream jobs and recomputing it per consumer would
-  * multiply the batch's dominant cost.
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.SQLExecution
+
+/** Hot-path policies for the engine's per-batch pipelines: pinning a
+  * frame that feeds several jobs, spreading a narrow one, and overlapping
+  * independent jobs on the driver.
   *
-  * Default: `localCheckpoint()` — blocks on the executors that computed
-  * them, lineage truncated. The recovery story that makes the truncation
-  * safe HERE (and only here): every pin sits inside a Structured
-  * Streaming `foreachBatch` body or a `resolveBatch` called from one, so
-  * a lost executor fails the current attempt, the stream retries the
-  * SAME batch from its replayable source, and the batchId fences
-  * (CommitLog's replay guard, the index folds' delete-then-write) keep
-  * the retry exactly-once. The cost of the truncated lineage is
-  * therefore a BATCH retry instead of a block recompute — a latency
-  * choice, not a correctness one.
-  *
-  * On a high-churn cluster (frequent executor loss: spot/preemptible
-  * fleets) re-running whole batches can dominate; set
-  *
-  *   spark.graft.hotpath.reliableCheckpoint = true
-  *
-  * and the same pins become reliable `checkpoint()`s — identical plan
-  * semantics (both truncate to a LogicalRDD; analysis, self-join
-  * behavior, and downstream plans are byte-identical), but blocks are
-  * written to `spark.sparkContext.setCheckpointDir(...)` on the cluster
-  * FS and survive any executor's death. Requires the checkpoint dir to
-  * be set (Spark throws a clear error if not). Replicated in-memory
-  * persist was considered and rejected: `persist` keeps lineage, which
-  * reintroduces the multi-execution of nondeterministic upstream stages
-  * that the eager pin exists to prevent.
+  * Pins are `localCheckpoint()`s by default: blocks stay on the executors
+  * that computed them, lineage truncated. That is safe because every
+  * streaming pin sits inside a `foreachBatch` body (or a `resolveBatch`
+  * called from one): a lost executor fails the attempt, the stream
+  * retries the SAME batch from its replayable source, and the batchId
+  * fences (CommitLog's replay guard, the index folds' delete-then-write)
+  * keep the retry exactly-once — a batch retry instead of a block
+  * recompute, a latency choice, not a correctness one. On high-churn
+  * fleets (spot/preemptible) set `spark.graft.hotpath.reliableCheckpoint
+  * = true` plus `sparkContext.setCheckpointDir(...)`: the same pins become
+  * reliable `checkpoint()`s on the cluster FS, with identical plans.
+  * Replicated `persist` was rejected: it keeps lineage, so a
+  * non-deterministic upstream could again be evaluated more than once.
   */
 object HotPath {
 
@@ -89,5 +84,93 @@ object HotPath {
       val target = df.sparkSession.sparkContext.defaultParallelism
       if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
     }
+  }
+
+  // ---- driver-side overlap --------------------------------------------
+
+  /** Success-path bound on one overlap call's wait: far above any single
+    * commit's writes at the scales this engine is measured at, so reaching
+    * it means a hung job, which is cancelled and reported, not awaited. */
+  val OverlapWaitBound: FiniteDuration = 4.hours
+
+  /** How long a failed call keeps cancelling and waiting for its siblings. */
+  val CancelGrace: FiniteDuration = 10.seconds
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** The one pool for every overlap: daemon, cached. Unbounded on purpose:
+    * each call bounds its own tasks in flight, so a task that overlaps in
+    * turn (a K10 table write running a delta commit) cannot starve it. */
+  private lazy val pool: ExecutorService = Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-side-job")
+    t.setDaemon(true)
+    t
+  }
+
+  /** Run `side` concurrently with `body` — two independent Spark actions
+    * of one operation, so the side's jobs back-fill the body's scheduling
+    * gaps and task tail — and return both results. Contract as
+    * [[inParallel]]; `site` names the call in errors and log lines. */
+  def overlap[S, B](site: String, spark: SparkSession)(side: => S)(body: => B): (S, B) = {
+    val r = inParallel[Any](site, spark, 2)(Seq(() => side, () => body))
+    (r(0).asInstanceOf[S], r(1).asInstanceOf[B])
+  }
+
+  /** Run `tasks` with at most `maxInFlight` at once, results in task
+    * order. Tasks run on the pool with the caller's active session and
+    * local properties (job group, description, scheduler pool) plus one
+    * job tag per call:
+    *  - the first failure wins; every later one is suppressed onto it;
+    *  - on failure no further task starts, the call's jobs are cancelled
+    *    by tag — repeatedly for up to [[CancelGrace]], which also catches
+    *    a job a sibling starts after the first cancel — and the first
+    *    failure is rethrown;
+    *  - the wait is bounded by [[OverlapWaitBound]]: on expiry the jobs
+    *    are cancelled, one ERROR line names the site, and the call throws.
+    */
+  def inParallel[T](site: String, spark: SparkSession, maxInFlight: Int)(
+      tasks: Seq[() => T]): Seq[T] = runTasks(site, spark, maxInFlight, OverlapWaitBound)(tasks)
+
+  private[operators] def runTasks[T](
+      site: String, spark: SparkSession, maxInFlight: Int, waitBound: FiniteDuration)(
+      tasks: Seq[() => T]): Seq[T] = {
+    val todo = tasks.toVector
+    val results = new Array[Any](todo.size)
+    val sc = spark.sparkContext
+    val tag = s"graft-overlap-${java.util.UUID.randomUUID()}"
+    def cancel(): Unit = sc.cancelJobsWithTag(tag, s"$site: a sibling task failed")
+    val failures = new ConcurrentLinkedQueue[Throwable]()
+    val failed = new CompletableFuture[Unit]()
+    def fail(t: Throwable): Unit = { failures.add(t); cancel(); failed.complete(()) }
+    val next = new AtomicInteger(0)
+    def work(): Unit = {
+      sc.addJobTag(tag)
+      var i = next.getAndIncrement()
+      while (i < todo.size && !failed.isDone) {
+        try results(i) = todo(i)()
+        catch { case t: Throwable => fail(t) }
+        i = next.getAndIncrement()
+      }
+    }
+    val all = CompletableFuture.allOf(Vector.fill(math.max(1, math.min(maxInFlight, todo.size)))(
+      SQLExecution.withThreadLocalCaptured(castToImpl(spark), pool)(work())): _*)
+    def done(f: CompletableFuture[_], ms: Long): Boolean =
+      try { f.get(ms, TimeUnit.MILLISECONDS); true }
+      catch { case _: TimeoutException => false; case _: ExecutionException => true }
+    try {
+      if (!done(CompletableFuture.anyOf(all, failed), waitBound.toMillis)) {
+        log.error(s"overlap wait expired: site=$site bound_ms=${waitBound.toMillis} " +
+          s"tasks=${todo.size} tag=$tag; cancelling the call's jobs")
+        fail(new TimeoutException(s"$site: jobs still running after $waitBound"))
+      }
+    } catch { case e: InterruptedException => fail(e) }
+    if (failures.isEmpty) return results.toSeq.map(_.asInstanceOf[T])
+    val graceEnd = System.nanoTime() + CancelGrace.toNanos
+    try while (!all.isDone && System.nanoTime() < graceEnd) { done(all, 250); cancel() }
+    catch { case _: InterruptedException => Thread.currentThread().interrupt() }
+    if (!all.isDone) log.warn(s"overlap tasks still running after cancel: site=$site tag=$tag")
+    val primary = failures.poll()
+    failures.asScala.foreach(t => if (t ne primary) primary.addSuppressed(t))
+    throw primary
   }
 }

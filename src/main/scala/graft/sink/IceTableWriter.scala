@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.col
 
 import graft.fs.ControlFs
 import graft.table.{Commit, FileEntry, IceTable}
-import graft.operators.PartitionTransforms
+import graft.operators.{HotPath, PartitionTransforms}
 
 /** Footer-derived stats for one staged file (public shape so the
   * distributed stats job can use a product encoder).
@@ -67,31 +67,35 @@ object IceTableWriter {
         "transform (days/months, bucket[N]) on the hot column, or pre-aggregate the " +
         "feed (compactSmallFiles mitigates the files, not the partition count)")
 
-  /** Coalesce floor (bytes) for the fan-out write's AQE rebalance — see
-    * the writeFiles comment. Conf-tunable
-    * (`spark.graft.write.fanout.minPartitionSize`); the 64 KB default
-    * keeps parallelism-first behavior for small many-partition-value
-    * batches while staying far below any sane advisory size, so cluster-
-    * scale task sizing (bytes/parallelism vs advisory) is untouched. */
-  val FanoutMinPartitionSizeConf = "spark.graft.write.fanout.minPartitionSize"
-  val FanoutMinPartitionSizeDefault = "64KB"
+  /** AQE coalesce floor of the fan-out write (see writeFiles): keeps small
+    * many-partition-value batches parallel, yet far below any sane advisory
+    * size, so cluster-scale task sizing is untouched. */
+  val FanoutMinPartitionSize = "64KB"
   private val AqeMinPartitionSizeKey = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 
-  /** Run `body` (a partitioned fan-out write) with the AQE coalesce
-    * minimum-partition-size floor lowered, restoring the session value
-    * after. Session-wide conf for the job's duration: a concurrent
-    * non-fan-out job planned in the window coalesces a little finer —
-    * a perf-neutral race, never a correctness one.
-    */
+  /** Per session: fan-out writes in flight, and the floor key's prior value. */
+  private val floorHolds = scala.collection.mutable.Map[SparkSession, (Int, Option[String])]()
+
+  /** Run `body` (a partitioned fan-out write) with the AQE coalesce floor
+    * lowered. Ref-counted per session under one lock: the first of any
+    * overlapping writers sets the floor, the last restores the prior value
+    * exactly (unset stays unset). A non-fan-out job planned while a fan-out
+    * write runs coalesces a little finer: a perf-only window. */
   private[sink] def withFanoutCoalesceFloor[T](spark: SparkSession)(body: => T): T = {
-    val floor = spark.conf.getOption(FanoutMinPartitionSizeConf)
-      .getOrElse(FanoutMinPartitionSizeDefault)
-    val prev = spark.conf.getOption(AqeMinPartitionSizeKey)
-    spark.conf.set(AqeMinPartitionSizeKey, floor)
+    floorHolds.synchronized {
+      // getAll holds only explicitly set keys (get would return the default)
+      val (n, saved) = floorHolds.getOrElse(spark, (0, spark.conf.getAll.get(AqeMinPartitionSizeKey)))
+      if (n == 0) spark.conf.set(AqeMinPartitionSizeKey, FanoutMinPartitionSize)
+      floorHolds(spark) = (n + 1, saved)
+    }
     try body
-    finally prev match {
-      case Some(v) => spark.conf.set(AqeMinPartitionSizeKey, v)
-      case None    => spark.conf.unset(AqeMinPartitionSizeKey)
+    finally floorHolds.synchronized {
+      val (n, saved) = floorHolds(spark)
+      if (n > 1) floorHolds(spark) = (n - 1, saved)
+      else {
+        floorHolds -= spark
+        saved.fold(spark.conf.unset(AqeMinPartitionSizeKey))(spark.conf.set(AqeMinPartitionSizeKey, _))
+      }
     }
   }
 
@@ -223,50 +227,16 @@ object IceTableWriter {
   ): Option[Commit] = {
     // The data save and delete save are INDEPENDENT Spark actions over the
     // same pinned resolve frame (CdcOps.resolveBatch localCheckpoints
-    // before splitting) writing to distinct staging dirs — submit the
-    // delete write from a driver thread so its job back-fills the data
-    // write's scheduling gaps and task tail (guide §2.6) instead of
-    // queueing behind it; publish still waits for both. A DEDICATED pool,
-    // not Ingest's K10 commit pool: in multi-table mode writeTable already
-    // runs ON that pool, and a nested Await inside a fixed pool's own
-    // thread can exhaust it (classic pool-in-pool deadlock).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val delF = Future {
-      // pool threads carry no active-session thread-local; anything
-      // below that resolves the session via getActiveSession must see
-      // the frame's own session, not another thread's
-      org.apache.spark.sql.SparkSession.setActiveSession(deleteKeysDf.sparkSession)
-      writeDeleteFiles(deleteKeysDf, table)
-    }(sideJobEc)
-    val dataFiles =
-      try writeFiles(dataDf, table, maxRecordsPerFile)
-      catch {
-        case t: Throwable =>
-          // surface the data-side error, but never abandon a running
-          // delete job silently (its staged files stay gc-fenced until
-          // the staging grace expires either way)
-          try Await.ready(delF, Duration.Inf) catch { case _: Throwable => () }
-          throw t
-      }
-    val delFiles = Await.result(delF, Duration.Inf)
+    // before splitting) writing to distinct staging dirs — overlap them so
+    // the delete job back-fills the data write's scheduling gaps and task
+    // tail (guide §2.6) instead of queueing behind it; publish still waits
+    // for both.
+    val (delFiles, dataFiles) =
+      HotPath.overlap("delta delete-files write", dataDf.sparkSession)(
+        writeDeleteFiles(deleteKeysDf, table))(
+        writeFiles(dataDf, table, maxRecordsPerFile))
     publish(table, batchId, dataFiles, delFiles, offsets, vtts, props)
   }
-
-  /** Driver-side pool for independent side-writes inside one logical
-    * commit (the delta data/delete overlap, the DLQ/main overlap) —
-    * daemon threads (never pins the JVM), cached (threads die after 60 s
-    * idle; concurrent multi-table callers each get a slot without a
-    * sizing knob). Only `Future`s that themselves never block on this
-    * pool are submitted here.
-    */
-  private[graft] lazy val sideJobEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-side-job")
-        t.setDaemon(true)
-        t
-      }))
 
   // ---- internals ------------------------------------------------------
 
@@ -352,9 +322,10 @@ object IceTableWriter {
     // partition values therefore collapses to 2-3 tasks that each open
     // dozens of parquet writers SEQUENTIALLY (r18 profile:
     // ingest_partitioned = 3 tasks × ~50 opens = 3.4 s task time) while
-    // the cluster idles. Scoped to the fan-out write only, the floor is
-    // lowered so the rebalance keeps up to defaultParallelism tasks for
-    // any batch wider than parallelism × floor; value-count awareness is
+    // the cluster idles. For the fan-out write's duration the floor is
+    // lowered to FanoutMinPartitionSize (64 KB, withFanoutCoalesceFloor)
+    // so the rebalance keeps up to defaultParallelism tasks for any
+    // batch wider than parallelism × floor; value-count awareness is
     // implicit — rebalance buckets BY partition value, so a batch with
     // few values occupies few buckets and still gets few tasks, and the
     // total file count (≈ one per value either way) is unchanged. At

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.config.{EngineConfig, TableConfig}
-import graft.operators.{CdcOps, Coercion, Routing}
+import graft.operators.{CdcOps, Coercion, HotPath, Routing}
 import graft.schema.{NameMapping => SchemaNameMapping, SchemaEvolution}
 import graft.table.{Commit, IceTable, TableMeta}
 
@@ -89,45 +89,17 @@ object Ingest {
         }
       } else {
         // K10 — multi-table parallel commit (`channel/Coordinator.doCommit
-        // :141-168` uses a cores×2 pool); Spark supports concurrent jobs
-        // from the driver, so per-table writes overlap their I/O
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: scala.concurrent.ExecutionContext = commitEc(config.commitThreads)
-        val fs = routed.map { case (tconf, tdf) =>
-          Future(TableResult(tconf.name,
-            writeTable(spark, tdf, batchId, tconf, config, bookkeeping)))
-        }
-        Await.result(Future.sequence(fs), Duration.Inf)
+        // :141-168`). Returns only once every table's jobs are done or
+        // cancelled, so the `finally` never unpersists under a live one.
+        HotPath.inParallel("K10 multi-table commit", spark, config.commitThreads)(
+          routed.map { case (tconf, tdf) =>
+            () => TableResult(tconf.name, writeTable(spark, tdf, batchId, tconf, config, bookkeeping))
+          })
       }
     } finally {
       if (cached) { filtered.unpersist(); () }
     }
   }
-
-  /** K10 — shared driver-side pools for multi-table parallel commits
-    * (`channel/Coordinator.doCommit:141-168` keeps a cores×2 pool for the
-    * connector's lifetime; a per-batch pool would be rebuilt every trigger).
-    * Pool size comes from `iceberg.control.commit.threads`
-    * (IcebergSinkConfig.java:92,229-233); one shared pool per distinct
-    * configured size for the JVM's lifetime. Daemon threads so an open
-    * pool never pins the JVM.
-    */
-  private val commitPools =
-    new java.util.concurrent.ConcurrentHashMap[Int, scala.concurrent.ExecutionContext]()
-
-  private def commitEc(threads: Int): scala.concurrent.ExecutionContext =
-    commitPools.computeIfAbsent(
-      math.max(1, threads),
-      n =>
-        scala.concurrent.ExecutionContext.fromExecutorService(
-          java.util.concurrent.Executors.newFixedThreadPool(
-            n,
-            r => {
-              val t = new Thread(r, s"graft-commit-pool-$n")
-              t.setDaemon(true)
-              t
-            })))
 
   /** Decode the [[graft.functions.OffsetsAgg]] observe metric into
     * (next-offsets, vtts). Blocks until the first job over the observed
@@ -219,9 +191,8 @@ object Ingest {
     // wedged the stream on every replay (and with strict off it was
     // silently nulled instead of dead-lettered) — exactly the failure
     // the DLQ exists to absorb.
-    var dlqF: Option[scala.concurrent.Future[Option[Commit]]] = None
-    val toWrite =
-      if (!config.deadLetterEnabled) tdf
+    val (dlqWrite, toWrite): (Option[() => Option[Commit]], DataFrame) =
+      if (!config.deadLetterEnabled) (None, tdf)
       else {
         val reason = Coercion.violationReason(tdf, table.schema,
           nameMapping = nameMapping, caseInsensitive = config.schemaCaseInsensitive)
@@ -241,66 +212,47 @@ object Ingest {
         // a clean batch writes an empty (zero-file) DLQ commit rather
         // than paying an extra emptiness-probe scan per trigger; the
         // commit log's checkpoint consolidation bounds the entry count.
-        // The DLQ write+commit targets a DIFFERENT table than the main
-        // write — two independent jobs over the same persisted batch —
-        // so it runs concurrently (guide §2.6) and is awaited below
-        // before this table's result returns. Replay safety is the same
-        // as the old sequential order: whichever commit lands first, a
-        // crashed batch replays under the same batchId and both tables'
+        // The DLQ commit targets a DIFFERENT table, so it overlaps the
+        // main write (guide §2.6). Whichever commit lands first, a crashed
+        // batch replays under the same batchId and both tables'
         // idempotence guards skip what already committed.
-        dlqF = Some(scala.concurrent.Future {
-          org.apache.spark.sql.SparkSession.setActiveSession(spark)
-          IceTableWriter.append(spark, dlqRows, dlqTable, batchId)
-        }(IceTableWriter.sideJobEc))
-        ok
+        (Some(() => IceTableWriter.append(spark, dlqRows, dlqTable, batchId)), ok)
       }
-    def awaitDlq(): Unit = dlqF.foreach { f =>
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf); ()
-    }
-    val result =
-      try {
-        if (cdcMode) {
-          // defaults are applied ONCE, at the config layer (fromProperties /
-          // tableConfig pre-fill default-id-columns into every TableConfig);
-          // re-applying them here would override a table's explicit
-          // empty-id-columns opt-out
-          val keyCols = tconf.idColumns
-          val op = CdcOps.opColumn(config.cdcField, config.upsertMode)
-          val ord =
-            if (tdf.columns.contains("offset")) col("offset").cast("long")
-            else monotonically_increasing_id()
-          val prepared = toWrite.withColumn(CdcOps.OpCol, op).withColumn(CdcOps.OrdCol, ord)
-          val coerced = Coercion.project(prepared, table.schema,
-            nameMapping = nameMapping,
-            caseInsensitive = config.schemaCaseInsensitive,
-            extraCols = Seq(CdcOps.OpCol, CdcOps.OrdCol),
-            // dead-letter mode subsumes strict (same rule as the append
-            // branch): violations were already routed away above
-            strict = config.strictCoercion && !config.deadLetterEnabled)
-          val (data, deleteKeys) = CdcOps.resolveBatch(coerced, keyCols)
-          IceTableWriter.delta(spark, data, deleteKeys, table, batchId,
-            offsets = bookkeeping()._1, vtts = bookkeeping()._2,
-            maxRecordsPerFile = config.maxRecordsPerFile)
-        } else {
-          val coerced = Coercion.project(toWrite, table.schema,
-            nameMapping = nameMapping,
-            caseInsensitive = config.schemaCaseInsensitive,
-            // dead-letter mode subsumes strict: violations were already
-            // routed away, so the projection must not re-throw on them
-            strict = config.strictCoercion && !config.deadLetterEnabled)
-          IceTableWriter.append(spark, coerced, table, batchId,
-            offsets = bookkeeping()._1, vtts = bookkeeping()._2,
-            maxRecordsPerFile = config.maxRecordsPerFile)
-        }
-      } catch {
-        case t: Throwable =>
-          // surface the main write's error, but never leave the DLQ job
-          // running unobserved past this call
-          try awaitDlq() catch { case _: Throwable => () }
-          throw t
+    def writeMain(): Option[Commit] =
+      if (cdcMode) {
+        // defaults are applied ONCE, at the config layer (fromProperties /
+        // tableConfig pre-fill default-id-columns into every TableConfig);
+        // re-applying them here would override a table's explicit
+        // empty-id-columns opt-out
+        val keyCols = tconf.idColumns
+        val op = CdcOps.opColumn(config.cdcField, config.upsertMode)
+        val ord =
+          if (tdf.columns.contains("offset")) col("offset").cast("long")
+          else monotonically_increasing_id()
+        val prepared = toWrite.withColumn(CdcOps.OpCol, op).withColumn(CdcOps.OrdCol, ord)
+        val coerced = Coercion.project(prepared, table.schema,
+          nameMapping = nameMapping,
+          caseInsensitive = config.schemaCaseInsensitive,
+          extraCols = Seq(CdcOps.OpCol, CdcOps.OrdCol),
+          // dead-letter mode subsumes strict (same rule as the append
+          // branch): violations were already routed away above
+          strict = config.strictCoercion && !config.deadLetterEnabled)
+        val (data, deleteKeys) = CdcOps.resolveBatch(coerced, keyCols)
+        IceTableWriter.delta(spark, data, deleteKeys, table, batchId,
+          offsets = bookkeeping()._1, vtts = bookkeeping()._2,
+          maxRecordsPerFile = config.maxRecordsPerFile)
+      } else {
+        val coerced = Coercion.project(toWrite, table.schema,
+          nameMapping = nameMapping,
+          caseInsensitive = config.schemaCaseInsensitive,
+          // dead-letter mode subsumes strict: violations were already
+          // routed away, so the projection must not re-throw on them
+          strict = config.strictCoercion && !config.deadLetterEnabled)
+        IceTableWriter.append(spark, coerced, table, batchId,
+          offsets = bookkeeping()._1, vtts = bookkeeping()._2,
+          maxRecordsPerFile = config.maxRecordsPerFile)
       }
-    awaitDlq()
-    result
+    dlqWrite.fold(writeMain())(dlq => HotPath.overlap("dead-letter write", spark)(dlq())(writeMain())._2)
   }
 
   /** Schema of the data payload: only the engine's internal `__graft_*`

@@ -739,13 +739,6 @@ final class IceTable private[table] (
   ): Option[Commit] = {
     val keyCols = meta.idColumns
     require(keyCols.nonEmpty, "merge requires id-columns on the table")
-    if (validateUnique) {
-      val dups = source.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("c")).filter(col("c") > 1).limit(1).collect()
-      require(dups.isEmpty,
-        s"merge source has multiple rows for key ${dups.headOption.map(_.toString).getOrElse("")} — " +
-          "deduplicate the source first (every engine rejects ambiguous MERGE sources)")
-    }
     // the source may carry extra columns the deleteWhen predicate needs
     // (e.g. an op marker); the insert payload is the table schema's
     // projection, taken AFTER the predicate filters
@@ -753,6 +746,16 @@ final class IceTable private[table] (
     val cols = cur.fieldNames.toSeq
     val missing = cols.filterNot(source.columns.contains)
     require(missing.isEmpty, s"merge source is missing table columns: ${missing.mkString(", ")}")
+    // pinned ONCE for its three consumers: a non-deterministic source
+    // re-evaluated per consumer could delete keys it never re-inserts
+    val pinned = graft.operators.HotPath.pin(source)
+    if (validateUnique) {
+      val dups = pinned.groupBy(keyCols.map(col): _*)
+        .agg(count(lit(1)).as("c")).filter(col("c") > 1).limit(1).collect()
+      require(dups.isEmpty,
+        s"merge source has multiple rows for key ${dups.headOption.map(_.toString).getOrElse("")} — " +
+          "deduplicate the source first (every engine rejects ambiguous MERGE sources)")
+    }
     val del = deleteWhen.getOrElse(lit(false))
     // align source TYPES to the table schema before writing — a source
     // with a mismatched column type (string ids from JSON, int where the
@@ -760,11 +763,11 @@ final class IceTable private[table] (
     // types poison every later read of the table. strict: a value that
     // cannot coerce fails THIS merge loudly instead.
     val data = graft.operators.Coercion.project(
-      source.filter(!coalesce(del, lit(false))), cur,
+      pinned.filter(!coalesce(del, lit(false))), cur,
       caseInsensitive = false, strict = true)
     val keySchema = StructType(cur.fields.filter(f => keyCols.contains(f.name)))
     val deleteKeys = graft.operators.Coercion.project(
-      source.select(keyCols.map(col): _*), keySchema,
+      pinned.select(keyCols.map(col): _*), keySchema,
       caseInsensitive = false, strict = true)
     graft.sink.IceTableWriter.delta(spark, data, deleteKeys, this, batchId)
   }

@@ -44,6 +44,11 @@ class StagingClearFailTestFs
     else super.delete(f, recursive)
 }
 
+/** Shared by the merge test's non-deterministic source (one JVM in local mode). */
+object MergeSourceCounter {
+  val next = new java.util.concurrent.atomic.AtomicLong()
+}
+
 class IceTableSuite extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -1125,6 +1130,23 @@ class IceTableSuite extends AnyFunSuite {
     assert(e.getMessage.contains("multiple rows"))
     // validation failure must not have committed anything
     assert(t.log.commits().size === 2)
+  }
+
+  test("merge evaluates a non-deterministic source once: each deleted key gets its replacement") {
+    val dir = TestSpark.freshDir("t9mgnd")
+    val t = IceTable.create(dir, schema, TableMeta(idColumns = Seq("id")))
+    IceTableWriter.append(spark, df((0L until 20L).map(i => (i, "old", 0.0)): _*), t, 0)
+    // each evaluation of the source draws the next 10 counter values, so
+    // two evaluations of it never yield the same 10 keys
+    val drawKey = udf(() => MergeSourceCounter.next.getAndIncrement() % 20L).asNondeterministic()
+    val src = spark.range(0, 10, 1, 1)
+      .select(drawKey().as("id"), lit("new").as("name"), lit(1.0).as("v"))
+    t.merge(spark, src, batchId = 1)
+    val rows = t.read(spark).select("id", "name").as[(Long, String)].collect().toSeq
+    val perKey = rows.groupBy(_._1).map { case (k, rs) => k -> rs.map(_._2) }
+    assert(perKey.keySet === (0L until 20L).toSet, "a deleted key lost its replacement row")
+    assert(perKey.values.forall(_.size == 1), s"a key kept its old row next to the new one: $perKey")
+    assert(rows.count(_._2 == "new") === 10)
   }
 
   test("readChanges emits un-netted insert/delete events in commit order; rewrites skipped") {
