@@ -1463,7 +1463,8 @@ object SparkEntry {
     // FIXED setup cost — the r18 A/B measured the 32-way spread at
     // 26.6 s task time vs 0.56 s single-task for the same 100k rows, and
     // the r19 re-measure on the sibling qTransformDms reproduced it
-    // (wall 1.37 s -> 3.34 s). r19's BinProbe corrected the attribution:
+    // (wall 1.37 s -> 3.34 s). r19's task-binary probe corrected the
+    // attribution (`git show b3e872d:src/main/scala/graft/tools/BinProbe.scala`):
     // the serialized plan is only ~28 KiB, so the cost is per-task
     // projection/aggregate machinery, not binary deserialization. Either
     // way: fat-plan stages want few tasks; only slim-plan CPU kernels
@@ -1517,9 +1518,10 @@ object SparkEntry {
     */
   private def qTransformDms(spark: SparkSession, sfDir: String): DataFrame = {
     val wh = freshDir("transform_dms")
-    // NOT spread — re-measured in r19 after BinProbe showed the r18
-    // "2.4 MB task binary" attribution was wrong (the plan serializes at
-    // ~28 KiB): the regression itself is REAL and reproduces — spreading
+    // NOT spread — re-measured in r19 after the task-binary probe
+    // (`git show b3e872d:src/main/scala/graft/tools/BinProbe.scala`) showed
+    // the r18 "2.4 MB task binary" attribution was wrong (the plan
+    // serializes at ~28 KiB): the regression itself is REAL and reproduces — spreading
     // the envelope build 32-way measured wall 1.37 s -> 3.34 s
     // (min-of-3) and Sigma-task 1.3 s -> 12-18 s, i.e. ~0.4 s of per-task
     // FIXED setup cost for this plan shape (projection/aggregate
@@ -2443,14 +2445,15 @@ object SparkEntry {
     * Clustering quality (inertia decrease, seed spread) is asserted in
     * LlmSuite.
     *
-    * maxIters sizing (measured, Scratch `kmiter`): the fixed point on
-    * the near-uniform synthetic embeddings needs 50 iterations at sf0.1
-    * (2 k vectors) and 155 at sf1 (20 k) — iteration count GROWS with n
-    * on structure-less data, so the old cap of 60 silently stopped
-    * converging one scale up (caught by the r14 sf1 verify sweep). 600
-    * covers roughly two more decades at the observed ~3× per 10× growth;
-    * driver-path iterations at these sizes are ~10 M flops each, so the
-    * headroom is free where it isn't needed.
+    * maxIters sizing (measured by the `kmiter` arm of
+    * `git show b3e872d:src/main/scala/graft/tools/Scratch.scala`): the
+    * fixed point on the near-uniform synthetic embeddings needs 50
+    * iterations at sf0.1 (2 k vectors) and 155 at sf1 (20 k) — iteration
+    * count GROWS with n on structure-less data, so the old cap of 60
+    * silently stopped converging one scale up (caught by the r14 sf1
+    * verify sweep). 600 covers roughly two more decades at the observed
+    * ~3× per 10× growth; driver-path iterations at these sizes are
+    * ~10 M flops each, so the headroom is free where it isn't needed.
     */
   private def qClusterKmeans(spark: SparkSession, sfDir: String): DataFrame =
     Similarity.kmeansReport(t(spark, sfDir, "embeddings"), "vec_id", "embedding",

@@ -35,8 +35,8 @@ private[graft] object ControlFs {
   // per op, ~20 ns, invisible next to any filesystem call. Exists so a
   // bench regression on a control-plane-heavy query can be attributed to
   // a PRIMITIVE (which op, how many, how long) instead of re-derived from
-  // first principles each round — `Scratch prof:<query>` prints the delta
-  // around a run.
+  // first principles each round — `graft.tools.Profile` prints the delta
+  // around each timed run.
   private final class OpStat {
     val count = new java.util.concurrent.atomic.LongAdder
     val nanos = new java.util.concurrent.atomic.LongAdder
@@ -51,13 +51,13 @@ private[graft] object ControlFs {
       s.count.increment(); s.nanos.add(System.nanoTime() - t0)
     }
   }
-  /** (op → (count, totalNanos)) since JVM start or the last reset. */
+  /** (op → (count, totalNanos)) since JVM start; diff two snapshots to
+    * attribute a run. */
   private[graft] def profileSnapshot(): Map[String, (Long, Long)] = {
     val b = Map.newBuilder[String, (Long, Long)]
     opStats.forEach((k, v) => b += k -> (v.count.sum(), v.nanos.sum()))
     b.result()
   }
-  private[graft] def resetProfile(): Unit = opStats.clear()
   /** Tally an engine-side (non-primitive) phase — e.g. the writer's
     * footer-stats pass — into the same profile. */
   private[graft] def timedOp[A](op: String)(f: => A): A = timed(op)(f)
@@ -98,10 +98,11 @@ private[graft] object ControlFs {
     * native hadoop libs applies its default permission by FORK+EXEC'ing
     * chmod (5.3 ms per create) — together the entire ~8 ms/commit the
     * loghist probe measured after the r15 port (java.nio: 0.15/0.04 ms;
-    * `Scratch fsops`). Cluster filesystems keep the pure Hadoop path —
-    * at 100 TB the cost there is network RTTs and the design minimizes
-    * op COUNT. For filesystems that resolve to the LOCAL disk (file:,
-    * plus registered test schemes extending RawLocalFileSystem), the
+    * SCALE.md's fsops micro-probe table). Cluster filesystems keep the
+    * pure Hadoop path — at 100 TB the cost there is network RTTs and the
+    * design minimizes op COUNT. For filesystems that resolve to the LOCAL
+    * disk (file:, plus registered test schemes extending
+    * RawLocalFileSystem), the
     * path still resolves THROUGH the filesystem (`pathToFile`, so scheme
     * mapping stays exercised and tested) but byte I/O runs on java.nio.
     * CREATE_NEW is O_EXCL — fail-if-exists strictly STRONGER than the
@@ -174,7 +175,8 @@ private[graft] object ControlFs {
     * Most control-plane listings (commit fences, schema versions, meta
     * pointers) need only names; on the local fast path this is ONE
     * directory read with zero per-child stats or Path constructions
-    * (~0.15 ms at 200 entries vs [[list]]'s ~1.4 ms — `Scratch fsops`).
+    * (~0.15 ms at 200 entries vs [[list]]'s ~1.4 ms — SCALE.md's fsops
+    * micro-probe).
     */
   def listNames(dir: String): Seq[String] = timed("listNames") {
     val (fs, p) = fsFor(dir)

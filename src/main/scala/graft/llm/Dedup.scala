@@ -486,10 +486,6 @@ object Dedup {
     aInB.unionByName(bInA)
   }
 
-  /** MinHash signature: k permutations approximated as (a*h+b) mod p over
-    * xxhash64 shingle hashes (standard universal-hash construction;
-    * parameter stream in [[graft.functions.TextHashUtil.minhashParams]]).
-    */
   /** Per-shingle base hashes (compute once per row and materialize — the
     * per-permutation mins below reference the same column, so the shingle
     * pass isn't re-evaluated `numHashes` times).
@@ -497,7 +493,10 @@ object Dedup {
   def shingleHashes(text: Column, n: Int): Column =
     transform(shingles(text, n), s => abs(xxhash64(s)))
 
-  /** Signature over a pre-materialized shingle-hash array column — ONE
+  /** MinHash signature over a pre-materialized shingle-hash array column:
+    * k permutations approximated as (a*h+b) mod p over the xxhash64
+    * shingle hashes (standard universal-hash construction; parameter
+    * stream in [[graft.functions.TextHashUtil.minhashParams]]), in ONE
     * fused pass computing all permutation minima
     * ([[graft.functions.MinHashSig]]; bit-identical to `numHashes`
     * separate `array_min(transform(...))` columns, which would re-scan
@@ -505,9 +504,6 @@ object Dedup {
     */
   def minhashSignatureFromHashes(hashes: Column, numHashes: Int): Column =
     graft.functions.TextHashes.minhash_signature(hashes, numHashes, seed = 42)
-
-  def minhashSignature(text: Column, n: Int, numHashes: Int): Column =
-    minhashSignatureFromHashes(shingleHashes(text, n), numHashes)
 
   /** LSH band buckets of a minhash signature: array of (band, bh) structs,
     * bh = hash of the band's `r` signature rows. Shared by the in-session

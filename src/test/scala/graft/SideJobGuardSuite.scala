@@ -10,13 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft.operators.HotPath` (`overlap` / `inParallel`), whose contract
   * bounds its waits, cancels sibling jobs on failure and keeps the first
   * error. A hand-rolled pool, `Future` or unbounded `Await` elsewhere in
-  * the engine would bring back none of that. The probe tools and the
-  * driver-contract entry point are outside the engine and exempt.
+  * the engine or its tools would bring back none of that.
   */
 class SideJobGuardSuite extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala/graft")
-  private val exempt = Set(root.resolve("operators/HotPath.scala"), root.resolve("SparkEntry.scala"))
+  private val exempt = root.resolve("operators/HotPath.scala")
   private val forbidden = Seq(
     """Duration\.Inf""",
     """Executors\.new\w*ThreadPool""",
@@ -26,7 +25,7 @@ class SideJobGuardSuite extends AnyFunSuite {
   test("no hand-rolled overlap site outside HotPath") {
     val files = Files.walk(root).iterator.asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(p => p.startsWith(root.resolve("tools")) || exempt.contains(p))
+      .filterNot(_ == exempt)
       .toSeq
     assert(files.size > 20, s"source tree not found under $root")
     val hits = for {
