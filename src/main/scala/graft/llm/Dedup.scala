@@ -486,13 +486,6 @@ object Dedup {
     aInB.unionByName(bInA)
   }
 
-  /** Per-shingle base hashes (compute once per row and materialize — the
-    * per-permutation mins below reference the same column, so the shingle
-    * pass isn't re-evaluated `numHashes` times).
-    */
-  def shingleHashes(text: Column, n: Int): Column =
-    transform(shingles(text, n), s => abs(xxhash64(s)))
-
   /** MinHash signature over a pre-materialized shingle-hash array column:
     * k permutations approximated as (a*h+b) mod p over the xxhash64
     * shingle hashes (standard universal-hash construction; parameter
@@ -556,9 +549,7 @@ object Dedup {
   }
 
   /** [[minhashLshPairs]] over a PRE-SHINGLED, materialized (id, shset)
-    * frame — the streaming shell computes the batch's shingle sets once
-    * per trigger and feeds cross-probe, within-batch search, and the
-    * index fold from the same frame instead of re-shingling three times.
+    * frame (the streaming shell's pinned batch features).
     *
     * Bucket-size guard for GROUP-shaped consumers (`maxBucket > 0`): a
     * duplicate group with m members puts all m into one (band, bucket)
@@ -1165,11 +1156,12 @@ object Dedup {
   private[llm] def hyperplaneSigRows(
       vecs: DataFrame, idName: String, vecName: String,
       bits: Int, tables: Int, dim: Int): DataFrame =
-    vecs.select(
-        col(idName),
-        posexplode(graft.functions.VectorOps.hyperplane_signatures(
-          col(vecName), bits, math.max(1, tables), dim)))
+    vecs.select(col(idName), posexplode(hyperplaneSigs(col(vecName), bits, tables, dim)))
       .select(col(idName), col("pos").as("t"), col("col").as("sig"))
+
+  /** Per-table signatures of one vector: the array [[hyperplaneSigRows]] explodes. */
+  private[llm] def hyperplaneSigs(v: Column, bits: Int, tables: Int, dim: Int): Column =
+    graft.functions.VectorOps.hyperplane_signatures(v, bits, math.max(1, tables), dim)
 
   private def lshCandidateStream(
       vv: DataFrame, bits: Int, tables: Int, dim0: Int = 0): DataFrame = {
@@ -1248,23 +1240,9 @@ object Dedup {
     if (p.count() <= driverEdgeThreshold) {
       val spark = p.sparkSession
       import spark.implicits._
-      val edges = p.as[(Long, Long)].collect()
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        // path compression — without it a chain-shaped graph makes the
-        // final labeling pass quadratic (an effective hang at ~10^5 nodes)
-        var c = x
-        while (parent.getOrElse(c, c) != r) { val next = parent(c); parent(c) = r; c = next }
-        r
-      }
-      edges.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      return parent.keys.toSeq.map(id => (id, find(id))).toDF("id", "group_id")
+      val uf = new UnionFind
+      p.as[(Long, Long)].collect().foreach { case (a, b) => uf.union(a, b) }
+      return uf.labels.toDF("id", "group_id")
     }
     if (starContraction) return starContractionComponents(p, maxIters)._1
     val und = p.union(p.select(col("v").as("u"), col("u").as("v")))
@@ -1298,6 +1276,28 @@ object Dedup {
         s"connectedComponents did not converge within $maxIters rounds — " +
           "component diameter exceeds the bound; raise maxIters")
     labels.select(col("id"), col("label").as("group_id"))
+  }
+
+  /** Driver union-find over long ids, every root its component's min id:
+    * [[connectedComponents]]' driver arm and the streaming dedup shell. */
+  private[graft] final class UnionFind {
+    private val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      // path compression — without it a chain-shaped graph makes the
+      // final labeling pass quadratic (an effective hang at ~10^5 nodes)
+      var c = x
+      while (parent.getOrElse(c, c) != r) { val next = parent(c); parent(c) = r; c = next }
+      r
+    }
+    def union(a: Long, b: Long): Unit = {
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    /** (id, component min) of every id passed to [[union]]. */
+    def labels: Seq[(Long, Long)] = parent.keys.toSeq.map(id => (id, find(id)))
   }
 
   /** Connected components by alternating large-star/small-star

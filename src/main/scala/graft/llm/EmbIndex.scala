@@ -2,7 +2,8 @@ package graft.llm
 
 import graft.fs.ControlFs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
@@ -15,20 +16,8 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
   * pair list (recall follows the same auto-sized bits/tables trade-off
   * as [[Dedup.embeddingNearDupPairs]]'s in-session path).
   *
-  * Layout under `dir` (all through Spark's filesystem layer). Every
-  * [[build]] stages its data tables under a fresh `gen-*` dir and
-  * commits the generation in the meta row LAST (the [[IndexLayout]]
-  * protocol), so a crash anywhere before the meta commit leaves the
-  * previous generation's meta+tables fully paired; the meta commit
-  * itself is a create-exclusive `ptr-vN` pointer publish
-  * ([[IndexLayout.publishMeta]], r15 — no torn-meta state), with the
-  * pre-r15 mutable `meta.parquet` read as a legacy fallback. The data
-  * tables are
-  * hive-partitioned by the WRITER'S BATCH exactly like
-  * [[LshIndex]] (-1 = base build and non-replayable appends;
-  * [[appendBatch]] writes its micro-batch id), so a replayed streaming
-  * batch REPLACES its own partition, and each row carries its writer
-  * batch again as `src_batch` so [[compact]]-folded rows stay excludable:
+  * Layout, generation publish and writer-batch partitioning exactly as
+  * [[LshIndex]] (the shared bucket/payload shape is [[StreamIndex]]'s):
   * {{{
   *   ptr-vN              meta pointer — highest N wins (name = commit)
   *   meta-vN.parquet/    bits / tables / dim / layout / compacted_through / gen
@@ -41,17 +30,9 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
   * shuffles; only candidate corpus vectors are fetched for the verify.
   */
 object EmbIndex {
+  import StreamIndex.BaseBatch
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** `batch` partition value for the base build and plain appends. */
-  private val BaseBatch = -1L
-
-  /** Probe-side broadcast hint gate (rows) — same contract as
-    * [[LshIndex.ProbeBroadcastRowLimit]]: hint only genuinely
-    * broadcast-sized batches, let AQE handle bulk backfills.
-    */
-  val ProbeBroadcastRowLimit: Long = 1L << 17
 
   /** On-disk layout version (v1 = the unpartitioned original, no longer
     * readable; v2 = batch-partitioned tables + `src_batch` +
@@ -64,18 +45,8 @@ object EmbIndex {
     */
   private val LayoutVersion = 3
 
-  private val vectorsSchema = StructType(Seq(
-    StructField("id", LongType),
-    StructField("v", ArrayType(DoubleType)),
-    StructField("src_batch", LongType),
-    StructField("batch", LongType)))
-
-  private val bucketsSchema = StructType(Seq(
-    StructField("id", LongType),
-    StructField("t", IntegerType),
-    StructField("sig", LongType),
-    StructField("src_batch", LongType),
-    StructField("batch", LongType)))
+  private val (bucketsSchema, vectorsSchema) =
+    StreamIndex.schemas("t", "sig", StructField("v", ArrayType(DoubleType)))
 
   /** Full meta row (internal): signature params + compaction watermark +
     * the published generation. */
@@ -120,14 +91,6 @@ object EmbIndex {
     val m = readMeta(spark, dir)
     (m.bits, m.tables, m.dim)
   }
-
-  // explicit schemas: a partition dir with zero data files (empty build)
-  // must read as an empty frame, not fail schema inference
-  private def readVectors(spark: SparkSession, dir: String, gen: String): DataFrame =
-    spark.read.schema(vectorsSchema).parquet(s"$dir/$gen/vectors.parquet")
-
-  private def readBuckets(spark: SparkSession, dir: String, gen: String): DataFrame =
-    spark.read.schema(bucketsSchema).parquet(s"$dir/$gen/buckets.parquet")
 
   /** Width of the first usable vector, or None on an empty frame. A
     * build over zero usable vectors stores `dim = 0` ("undetermined")
@@ -176,15 +139,9 @@ object EmbIndex {
   private def widthClean(vv: DataFrame, vecName: String, dim: Int): DataFrame =
     if (dim <= 0) vv else vv.filter(size(col(vecName)) === dim)
 
-  /** Count `vv`'s rows (the append return value) and WARN when the
-    * width filter dropped any — see [[widthClean]]. `vv0` must be
-    * materialized (both counts are cheap re-scans of its blocks).
-    */
-  private def countWarningDropped(vv0: DataFrame, vv: DataFrame, dim: Int, where: String): Long =
-    countWarningDropped(vv0.count(), vv, dim, where)
-
-  private def countWarningDropped(total: Long, vv: DataFrame, dim: Int, where: String): Long = {
-    val kept = vv.count()
+  /** Returns `kept` (the append's row count) and WARNs when the width
+    * filter dropped any of `total` — see [[widthClean]]. */
+  private def countWarningDropped(total: Long, kept: Long, dim: Int, where: String): Long = {
     if (kept < total)
       log.warn(s"$where: ${total - kept} of $total usable vectors have a different width " +
         s"than the index geometry (dim $dim) and were excluded — if this is every row, the " +
@@ -192,14 +149,6 @@ object EmbIndex {
     kept
   }
 
-  /** The signature derivation IS [[Dedup.hyperplaneSigRows]] — one shared
-    * definition, so the stored index and the in-session candidate stream
-    * can never drift apart.
-    */
-  private def sigRows(
-      vecs: DataFrame, idName: String, vecName: String,
-      bits: Int, tables: Int, dim: Int): DataFrame =
-    Dedup.hyperplaneSigRows(vecs, idName, vecName, bits, tables, dim)
 
   /** Normalized, dedup-able vectors of a frame: degenerate embeddings
     * (null/empty/zero/NaN/Inf) can never verify as near-dups — their
@@ -250,16 +199,15 @@ object EmbIndex {
     // too big to pin)
     val totalObs = org.apache.spark.sql.Observation()
     val vv = widthClean(vv0.observe(totalObs, count(lit(1)).as("total")), "v", dim)
-      .withColumn("src_batch", lit(BaseBatch))
-      .withColumn("batch", lit(BaseBatch))
+      .transform(StreamIndex.tagged(_, BaseBatch))
     vv.write.mode("overwrite").partitionBy("batch").parquet(s"$dir/$gen/vectors.parquet")
-    val stored = readVectors(spark, dir, gen)
+    val stored = StreamIndex.read(spark, s"$dir/$gen/vectors.parquet", vectorsSchema)
     // one job sizes the bits AND is the return value; routed through the
     // same drop-observability warn as the append paths (r14 advice): a
     // systemic re-embed at a new width during a FULL rebuild otherwise
     // produced a near-empty index with no log signal
     val n = countWarningDropped(
-      totalObs.get("total").asInstanceOf[Long], stored, dim, "EmbIndex.build")
+      totalObs.get("total").asInstanceOf[Long], stored.count(), dim, "EmbIndex.build")
     // auto-sized bits are ALWAYS capped at the recall-feasible bound (with
     // explicit tables: the bits at which THAT table count still meets the
     // per-pair miss tolerance) — only explicit bits waive the guarantee;
@@ -270,9 +218,8 @@ object EmbIndex {
       else math.min(Dedup.sizedLshBits(n), Dedup.recallFeasibleBits(threshold,
         maxTables = if (tables > 0) tables else 64))
     val useTables = if (tables > 0) tables else Dedup.sizedLshTables(threshold, useBits)
-    sigRows(stored, "id", "v", useBits, useTables, dim)
-      .withColumn("src_batch", lit(BaseBatch))
-      .withColumn("batch", lit(BaseBatch))
+    Dedup.hyperplaneSigRows(stored, "id", "v", useBits, useTables, dim)
+      .transform(StreamIndex.tagged(_, BaseBatch))
       .write.mode("overwrite").partitionBy("batch").parquet(s"$dir/$gen/buckets.parquet")
     // meta commits LAST (the family's publish order — see LshIndex.build
     // for the full rationale): a crash after a meta-first write paired
@@ -316,7 +263,7 @@ object EmbIndex {
       vecCol: String,
       threshold: Double,
       excludeBatch: Option[Long] = None,
-      broadcastRowLimit: Long = ProbeBroadcastRowLimit
+      broadcastRowLimit: Long = LshIndex.ProbeBroadcastRowLimit
   ): DataFrame =
     queryBatchWith(spark, dir, batch, idCol, vecCol, threshold, excludeBatch,
       readMeta(spark, dir), broadcastRowLimit)
@@ -330,10 +277,9 @@ object EmbIndex {
       threshold: Double,
       excludeBatch: Option[Long],
       meta: EmbMeta,
-      broadcastRowLimit: Long = ProbeBroadcastRowLimit
+      broadcastRowLimit: Long = LshIndex.ProbeBroadcastRowLimit
   ): DataFrame = {
-    def visible(df: DataFrame): DataFrame =
-      excludeBatch.fold(df)(b => df.filter(col("batch") =!= b && col("src_batch") =!= b))
+    def visible(df: DataFrame): DataFrame = StreamIndex.visible(df, excludeBatch)
     val newVecs0 = usable(batch, idCol, vecCol, "id_new")
       .withColumnRenamed("v", "v_new")
     // a dim-0 snapshot = index built over zero vectors: nothing can
@@ -378,7 +324,8 @@ object EmbIndex {
     // gated on the batch being genuinely broadcast-sized: past the gate a
     // cross join would plan a cartesian shuffle — the bucket path stays
     // the plan there (equally candidate-heavy, but shuffle-structured)
-    val storedVecs = visible(readVectors(spark, dir, effMeta.gen))
+    val storedVecs = visible(StreamIndex.read(spark, s"$dir/${effMeta.gen}/vectors.parquet",
+      vectorsSchema))
       .select(col("id").as("id_indexed"), col("v").as("v_idx"))
     if (hinted && Similarity.lshRandomPairCoverage(effMeta.bits, effMeta.tables) >=
         Similarity.LshDegenerateCoverage) {
@@ -387,8 +334,10 @@ object EmbIndex {
           Similarity.dot(col("v_new"), col("v_idx")).as("cosine"))
         .filter(col("cosine") >= threshold)
     }
-    val newSigs = sigRows(newVecs, "id_new", "v_new", effMeta.bits, effMeta.tables, effMeta.dim)
-    val index = visible(readBuckets(spark, dir, effMeta.gen))
+    val newSigs = Dedup.hyperplaneSigRows(newVecs, "id_new", "v_new",
+      effMeta.bits, effMeta.tables, effMeta.dim)
+    val index = visible(StreamIndex.read(spark, s"$dir/${effMeta.gen}/buckets.parquet",
+      bucketsSchema))
     // batch side broadcast: the corpus-sized index never shuffles
     val candidates = index
       .join(maybeBroadcast(newSigs), Seq("t", "sig"))
@@ -426,44 +375,11 @@ object EmbIndex {
       batch: DataFrame,
       idCol: String,
       vecCol: String
-  ): Long = {
-    val meta = readMeta(spark, dir)
-    val vv0 = usable(batch, idCol, vecCol, "id").localCheckpoint()
-    val effMeta = resolveMeta(spark, dir, meta, vv0) // pins dim-0 empty builds
-    val vv = widthClean(vv0, "v", effMeta.dim) // see widthClean: never verifiable
-    sigRows(vv, "id", "v", effMeta.bits, effMeta.tables, effMeta.dim)
-      .withColumn("src_batch", lit(BaseBatch))
-      .withColumn("batch", lit(BaseBatch))
-      .write.mode("append").partitionBy("batch").parquet(s"$dir/${effMeta.gen}/buckets.parquet")
-    vv
-      .withColumn("src_batch", lit(BaseBatch))
-      .withColumn("batch", lit(BaseBatch))
-      .write.mode("append").partitionBy("batch").parquet(s"$dir/${effMeta.gen}/vectors.parquet")
-    countWarningDropped(vv0, vv, effMeta.dim, "EmbIndex.append")
-  }
-
-  /** Remove one batch's partition directory — see
-    * [[LshIndex]]: an explicit delete (not dynamic partition overwrite)
-    * because dynamic overwrite only touches partitions PRESENT in the
-    * output, leaving stale rows alive when a replay computes fewer or
-    * zero rows.
-    */
-  private def dropBatchPartition(spark: SparkSession, table: String, batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$table/batch=$batchId")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    ()
-  }
+  ): Long = appendBatchWith(spark, dir, batch, idCol, vecCol, BaseBatch, readMeta(spark, dir))
 
   /** Idempotent, replay-safe append for streaming micro-batches — the
-    * exact semantics of [[LshIndex.appendBatch]]: the `batch=<batchId>`
-    * partition is DELETED and rewritten, so a Spark micro-batch replay
-    * REPLACES its partition rather than duplicating rows, even when the
-    * replay computes fewer or zero rows. Buckets replace first, vectors
-    * second — any crash window costs recall, never duplicate or stale
-    * verify rows. A batch at or below the [[compact]] watermark no-ops
-    * (its rows are already folded into the base partition).
-    */
+    * exact semantics of [[LshIndex.appendBatch]]. A batch at or below the
+    * [[compact]] watermark no-ops (already folded into the base). */
   def appendBatch(
       spark: SparkSession,
       dir: String,
@@ -476,6 +392,7 @@ object EmbIndex {
     appendBatchWith(spark, dir, batch, idCol, vecCol, batchId, readMeta(spark, dir))
   }
 
+  /** [[append]] (`batchId` = BaseBatch) or [[appendBatch]] at `meta`. */
   private[graft] def appendBatchWith(
       spark: SparkSession,
       dir: String,
@@ -485,9 +402,10 @@ object EmbIndex {
       batchId: Long,
       meta: EmbMeta
   ): Long = {
+    val replayable = batchId != BaseBatch
     // already folded into base by compact — a replay's rows are present
     // and no longer partition-addressable; rewriting would duplicate them
-    if (batchId <= meta.compactedThrough) return 0L
+    if (replayable && batchId <= meta.compactedThrough) return 0L
     val vv0 = usable(batch, idCol, vecCol, "id").localCheckpoint()
     // an index built empty carries dim 0 — the first non-empty append
     // pins the corpus width here (persisted, so later snapshots see it)
@@ -495,17 +413,12 @@ object EmbIndex {
     // one width-mismatched row must not wedge a replayed micro-batch
     // forever on the sig kernel's dim guard (see widthClean)
     val vv = widthClean(vv0, "v", effMeta.dim)
-    dropBatchPartition(spark, s"$dir/${effMeta.gen}/buckets.parquet", batchId)
-    sigRows(vv, "id", "v", effMeta.bits, effMeta.tables, effMeta.dim)
-      .withColumn("src_batch", lit(batchId))
-      .withColumn("batch", lit(batchId))
-      .write.mode("append").partitionBy("batch").parquet(s"$dir/${effMeta.gen}/buckets.parquet")
-    dropBatchPartition(spark, s"$dir/${effMeta.gen}/vectors.parquet", batchId)
-    vv
-      .withColumn("src_batch", lit(batchId))
-      .withColumn("batch", lit(batchId))
-      .write.mode("append").partitionBy("batch").parquet(s"$dir/${effMeta.gen}/vectors.parquet")
-    countWarningDropped(vv0, vv, effMeta.dim, s"EmbIndex.appendBatch(batch=$batchId)")
+    StreamIndex.writeBatch(spark, batchId, replace = replayable)(
+      s"$dir/${effMeta.gen}/buckets.parquet" -> StreamIndex.tagged(
+        Dedup.hyperplaneSigRows(vv, "id", "v", effMeta.bits, effMeta.tables, effMeta.dim), batchId),
+      s"$dir/${effMeta.gen}/vectors.parquet" -> StreamIndex.tagged(vv, batchId))
+    countWarningDropped(vv0.count(), vv.count(), effMeta.dim,
+      if (replayable) s"EmbIndex.appendBatch(batch=$batchId)" else "EmbIndex.append")
   }
 
   /** Fold aged batch partitions (0 ≤ b ≤ `upToBatch`) of both data tables
@@ -523,5 +436,61 @@ object EmbIndex {
     IndexMaintenance.compactTable(spark, s"$dir/${m.gen}/vectors.parquet", vectorsSchema, upToBatch)
     writeMeta(spark, dir, m.bits, m.tables, m.dim, m.gen,
       math.max(m.compactedThrough, upToBatch))
+  }
+
+  /** This index as the streaming dedup shell drives it ([[StreamIndex]]):
+    * normalized vector, [[Dedup.hyperplaneSigs]] keys, exact cosine. Until
+    * an append pins the width of an index built empty (meta re-read each
+    * trigger), and whenever its sizing cannot prune (the probe's
+    * cross-verify switch), the shell takes the distributed arm, which runs
+    * the batch calls [[queryBatchWith]], [[Dedup.embeddingNearDupPairs]]
+    * and [[appendBatchWith]] on the batch's own columns. */
+  private[graft] def stream(spark: SparkSession, dir: String, idCol: String, vecCol: String,
+      threshold: Double): StreamIndex[ArrayData] =
+    new Stream(spark, dir, readMeta(spark, dir), idCol, vecCol, threshold)
+
+  private final class Stream(spark: SparkSession, dir: String, meta0: EmbMeta, idCol: String,
+      vecCol: String, threshold: Double) extends StreamIndex[ArrayData](spark,
+      (s"$dir/${meta0.gen}/buckets.parquet", s"$dir/${meta0.gen}/vectors.parquet"),
+      (bucketsSchema, vectorsSchema), meta0.compactedThrough) {
+    import StreamIndex._
+    private var meta = meta0
+    def features(batch: DataFrame): DataFrame = {
+      IntegralId.require(batch, idCol, "EmbIndex")
+      val x = batch.withColumn(FeatId, col(idCol).cast("long"))
+        .withColumn(FeatX, Similarity.normalize(col(vecCol)))
+        .withColumn(FeatX, when(Similarity.clusterable(col(FeatX)), col(FeatX)))
+      // only the driver arm reads features, and only at a pinned width
+      x.withColumn(FeatKeys, when(size(col(FeatX)) === meta.dim,
+        Dedup.hyperplaneSigs(col(FeatX), meta.bits, meta.tables, meta.dim)))
+    }
+    def payloadBytes(x: Column): Column = lit(meta.dim.toLong * 8L + 32L)
+    def driverArm: Boolean = {
+      if (meta.dim == 0) meta = readMeta(spark, dir)
+      meta.dim > 0 &&
+        Similarity.lshRandomPairCoverage(meta.bits, meta.tables) < Similarity.LshDegenerateCoverage
+    }
+    def groupCap: Int = 0
+    def verifyForm(x: Any): ArrayData =
+      ArrayData.toArrayData(x.asInstanceOf[scala.collection.Seq[Double]].toArray)
+    def similar(a: ArrayData, b: ArrayData): Boolean = // the Spark-side verify's own kernel
+      Option(graft.functions.VectorKernels.dotDD(a, b, false)).exists(_ >= threshold)
+    override def foldRows(rows: Seq[Row], batchId: Long): Unit = {
+      countWarningDropped(rows.size, rows.count(!_.isNullAt(2)), meta.dim,
+        s"EmbIndex stream fold (batch=$batchId)")
+      super.foldRows(rows, batchId)
+    }
+    def prepare(batch: DataFrame): DataFrame = batch
+    def crossDups(prepared: DataFrame, batchId: Long): DataFrame =
+      queryBatchWith(spark, dir, prepared, idCol, vecCol, threshold, Some(batchId), meta)
+    def withinPairs(prepared: DataFrame): DataFrame =
+      // dim pinned to the index's width: a degenerate leading vector must
+      // not re-detect a narrower plane set than the index was built with
+      Dedup.embeddingNearDupPairs(prepared, idCol, vecCol, threshold,
+        lshBits = meta.bits, lshTables = meta.tables, dim0 = meta.dim).select("id_a", "id_b")
+    def append(survivors: DataFrame, batchId: Long): Unit = {
+      appendBatchWith(spark, dir, survivors, idCol, vecCol, batchId, meta); ()
+    }
+    def compact(upToBatch: Long): Unit = EmbIndex.compact(spark, dir, upToBatch)
   }
 }

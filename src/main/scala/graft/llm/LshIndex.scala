@@ -1,8 +1,9 @@
 package graft.llm
 
 import graft.fs.ControlFs
+import graft.operators.HotPath.Pinnable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
@@ -44,9 +45,7 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField,
   * fetched from `shingles.parquet`.
   */
 object LshIndex {
-
-  /** `batch` partition value for the base build and plain appends. */
-  private val BaseBatch = -1L
+  import StreamIndex.BaseBatch
 
   /** Probe-side broadcast hint gate (rows): at or below this many batch
     * rows the probe/verify joins are broadcast-hinted — the corpus-sized
@@ -67,18 +66,8 @@ object LshIndex {
     * slot + object overhead) for the byte gate. */
   private[llm] val EstimatedShingleBytes: Long = 64L
 
-  private val shinglesSchema = StructType(Seq(
-    StructField("id", LongType),
-    StructField("shset", ArrayType(StringType)),
-    StructField("src_batch", LongType),
-    StructField("batch", LongType)))
-
-  private val bucketsSchema = StructType(Seq(
-    StructField("id", LongType),
-    StructField("band", org.apache.spark.sql.types.IntegerType),
-    StructField("bh", LongType),
-    StructField("src_batch", LongType),
-    StructField("batch", LongType)))
+  private val (bucketsSchema, shinglesSchema) =
+    StreamIndex.schemas("band", "bh", StructField("shset", ArrayType(StringType)))
 
   // meta rides as a 1-row parquet THROUGH Spark's filesystem layer, like
   // the data tables — a driver-local java.nio file would split the index
@@ -132,38 +121,31 @@ object LshIndex {
   private[graft] def dataDir(spark: SparkSession, dir: String): String =
     s"$dir/${readMeta(spark, dir).gen}"
 
-  /** (shingle n, numHashes, bands) an index was built with — the
-    * signature parameters a caller must reuse for any in-session search
-    * whose results should be consistent with the index (e.g. the
-    * within-batch pass of [[graft.streaming.DedupStream]]).
-    */
-  def params(spark: SparkSession, dir: String): (Int, Int, Int) = {
-    val m = readMeta(spark, dir)
-    (m.n, m.numHashes, m.bands)
-  }
-
-  // explicit schemas: a partition dir with zero data files (empty build)
-  // must read as an empty frame, not fail schema inference
-  private def readShingles(spark: SparkSession, dir: String, gen: String): DataFrame =
-    spark.read.schema(shinglesSchema).parquet(s"$dir/$gen/shingles.parquet")
-
-  private def readBuckets(spark: SparkSession, dir: String, gen: String): DataFrame =
-    spark.read.schema(bucketsSchema).parquet(s"$dir/$gen/buckets.parquet")
-
-  /** THE shingle-set → (id, band, bh) bucket derivation — the byte-level
+  /** THE shingle-set → per-band bucket key derivation — the byte-level
     * compatibility contract between the stored index and every probe.
-    * One definition shared by build/append/queryBatch so the three can
-    * never drift apart. `sets` must carry (<idName>, <setName>).
+    * One definition shared by build/append/query and the streaming
+    * shell's features, so they can never drift apart. Appends `keysName`
+    * to `sets`: element `band` is that band's bh; null for a null set.
     */
-  private def bucketRows(
-      sets: DataFrame, idName: String, setName: String, numHashes: Int, bands: Int): DataFrame = {
-    val r = numHashes / bands
+  private def withBucketKeys(
+      sets: DataFrame, setName: String, keysName: String, numHashes: Int, bands: Int): DataFrame =
     sets
-      .select(col(idName), transform(col(setName), s => abs(xxhash64(s))).as("hh"))
-      .select(col(idName), Dedup.minhashSignatureFromHashes(col("hh"), numHashes).as("sig"))
-      .select(col(idName), explode(Dedup.bandBuckets(col("sig"), bands, r)).as("bb"))
-      .select(col(idName), col("bb.band").as("band"), col("bb.bh").as("bh"))
-  }
+      .withColumn("__graft_sig", Dedup.minhashSignatureFromHashes(
+        transform(col(setName), s => abs(xxhash64(s))), numHashes))
+      .withColumn(keysName, when(col(setName).isNotNull, transform(
+        Dedup.bandBuckets(col("__graft_sig"), bands, numHashes / bands), _.getField("bh"))))
+      .drop("__graft_sig")
+
+  /** (id, band, bh) index rows of `sets` (<idName>, <setName>). */
+  private def bucketRows(
+      sets: DataFrame, idName: String, setName: String, numHashes: Int, bands: Int): DataFrame =
+    keyRows(withBucketKeys(sets.select(col(idName), col(setName)), setName, "__graft_keys",
+      numHashes, bands), idName, "__graft_keys")
+
+  /** (id, band, bh) rows of per-band keys (<idName>, <keysName>). */
+  private def keyRows(keyed: DataFrame, idName: String, keysName: String): DataFrame =
+    keyed.select(col(idName), posexplode(col(keysName)))
+      .select(col(idName), col("pos").as("band"), col("col").as("bh"))
 
   private[graft] def shingleSets(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     IntegralId.require(df, idCol, "LshIndex")
@@ -220,14 +202,12 @@ object LshIndex {
     // write already knows (rows landed = docs indexed)
     val obs = org.apache.spark.sql.Observation(s"lsh_build_$gen")
     shingleSets(corpus, idCol, textCol, n)
-      .withColumn("src_batch", lit(BaseBatch))
-      .withColumn("batch", lit(BaseBatch))
+      .transform(StreamIndex.tagged(_, BaseBatch))
       .observe(obs, count(lit(1)).as("docs"))
       .write.mode("overwrite").partitionBy("batch").parquet(s"$dir/$gen/shingles.parquet")
-    val stored = readShingles(spark, dir, gen)
+    val stored = StreamIndex.read(spark, s"$dir/$gen/shingles.parquet", shinglesSchema)
     bucketRows(stored, "id", "shset", numHashes, bands)
-      .withColumn("src_batch", lit(BaseBatch))
-      .withColumn("batch", lit(BaseBatch))
+      .transform(StreamIndex.tagged(_, BaseBatch))
       .write.mode("overwrite").partitionBy("batch").parquet(s"$dir/$gen/buckets.parquet")
     writeMeta(spark, dir, n, numHashes, bands, gen)
     IndexLayout.sweepGenerations(spark, dir, keep = gen, prevPublished = prevGen)
@@ -266,46 +246,14 @@ object LshIndex {
       batch: DataFrame,
       idCol: String,
       textCol: String
-  ): Long = {
-    val meta = readMeta(spark, dir)
-    val withSets = shingleSets(batch, idCol, textCol, meta.n)
-      .localCheckpoint() // feeds both appends + the count
-    bucketRows(withSets, "id", "shset", meta.numHashes, meta.bands)
-      .withColumn("src_batch", lit(BaseBatch))
-      .withColumn("batch", lit(BaseBatch))
-      .write.mode("append").partitionBy("batch").parquet(s"$dir/${meta.gen}/buckets.parquet")
-    withSets
-      .withColumn("src_batch", lit(BaseBatch))
-      .withColumn("batch", lit(BaseBatch))
-      .write.mode("append").partitionBy("batch").parquet(s"$dir/${meta.gen}/shingles.parquet")
-    withSets.count()
-  }
-
-  /** Remove one batch's partition directory from a data table — the
-    * replace half of [[appendBatch]]'s delete-then-write. An explicit
-    * delete (not dynamic partition overwrite) because dynamic overwrite
-    * only touches partitions PRESENT in the output: a replay that
-    * legitimately computes fewer or zero rows would leave the first
-    * attempt's stale rows alive.
-    */
-  private def dropBatchPartition(spark: SparkSession, table: String, batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$table/batch=$batchId")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    ()
-  }
+  ): Long = appendAs(spark, dir, batch, idCol, textCol, BaseBatch)
 
   /** Idempotent, replay-safe variant of [[append]] for streaming
-    * micro-batches: the `batch=<batchId>` partition is DELETED and
-    * rewritten, so re-running the same batch (Spark replays
-    * micro-batches after failures) REPLACES that partition rather than
-    * duplicating rows — even when the replay computes fewer or zero
-    * rows. `batchId` must be ≥ 0 (negative values are the index's own
-    * base partition) and each id must appear in only one batch.
-    *
-    * Ordering mirrors [[append]]: buckets replace first, shingles
-    * second — any crash window costs recall (candidates without verify
-    * sets drop out), never duplicate or stale verify rows.
+    * micro-batches: re-running the same batch REPLACES its
+    * `batch=<batchId>` partitions, even when the replay computes fewer or
+    * zero rows ([[StreamIndex.writeBatch]]). `batchId` must be ≥ 0
+    * (negative values are the base partition) and each id must appear in
+    * only one batch.
     */
   def appendBatch(
       spark: SparkSession,
@@ -316,41 +264,25 @@ object LshIndex {
       batchId: Long
   ): Long = {
     require(batchId >= 0, s"appendBatch needs a non-negative batch id: $batchId")
-    appendBatchWith(spark, dir, batch, idCol, textCol, batchId, readMeta(spark, dir))
+    appendAs(spark, dir, batch, idCol, textCol, batchId)
   }
 
-  private[graft] def appendBatchWith(
-      spark: SparkSession,
-      dir: String,
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      batchId: Long,
-      meta: LshMeta,
-      /** pre-shingled, MATERIALIZED (id, shset) frame for exactly the
-        * rows of `batch` (see [[queryBatchWith]]). */
-      preSets: Option[DataFrame] = None
-  ): Long = {
-    // a batch at or below the compaction watermark was already FOLDED into
-    // the base partition: its rows are in the index but no longer
-    // partition-addressable, so the delete-then-write below would
-    // duplicate them. A replay of such a batch is a no-op — exactly-once
-    // means its effect is present, and [[compact]]'s contract (only
-    // compact below the stream's committed batch) means this guard only
-    // ever fires defensively.
-    if (batchId <= meta.compactedThrough) return 0L
-    val withSets = preSets.getOrElse(
-      shingleSets(batch, idCol, textCol, meta.n).localCheckpoint())
-    dropBatchPartition(spark, s"$dir/${meta.gen}/buckets.parquet", batchId)
-    bucketRows(withSets, "id", "shset", meta.numHashes, meta.bands)
-      .withColumn("src_batch", lit(batchId))
-      .withColumn("batch", lit(batchId))
-      .write.mode("append").partitionBy("batch").parquet(s"$dir/${meta.gen}/buckets.parquet")
-    dropBatchPartition(spark, s"$dir/${meta.gen}/shingles.parquet", batchId)
-    withSets
-      .withColumn("src_batch", lit(batchId))
-      .withColumn("batch", lit(batchId))
-      .write.mode("append").partitionBy("batch").parquet(s"$dir/${meta.gen}/shingles.parquet")
+  /** [[append]] (`batchId` = BaseBatch) or [[appendBatch]]. */
+  private def appendAs(spark: SparkSession, dir: String, batch: DataFrame, idCol: String,
+      textCol: String, batchId: Long): Long = {
+    val meta = readMeta(spark, dir)
+    val replayable = batchId != BaseBatch
+    // at or below the compaction watermark the batch is already FOLDED
+    // into the base partition (no longer partition-addressable), so a
+    // rewrite would duplicate it; [[compact]]'s contract makes this a
+    // defensive no-op
+    if (replayable && batchId <= meta.compactedThrough) return 0L
+    val withSets = shingleSets(batch, idCol, textCol, meta.n)
+      .localCheckpoint() // feeds both appends + the count
+    StreamIndex.writeBatch(spark, batchId, replace = replayable)(
+      s"$dir/${meta.gen}/buckets.parquet" ->
+        StreamIndex.tagged(bucketRows(withSets, "id", "shset", meta.numHashes, meta.bands), batchId),
+      s"$dir/${meta.gen}/shingles.parquet" -> StreamIndex.tagged(withSets, batchId))
     withSets.count()
   }
 
@@ -382,32 +314,28 @@ object LshIndex {
       threshold: Double,
       excludeBatch: Option[Long] = None,
       broadcastRowLimit: Long = ProbeBroadcastRowLimit
-  ): DataFrame =
-    queryBatchWith(spark, dir, batch, idCol, textCol, threshold, excludeBatch,
-      readMeta(spark, dir), broadcastRowLimit)
+  ): DataFrame = {
+    val meta = readMeta(spark, dir)
+    val sets = shingleSets(batch, idCol, textCol, meta.n)
+    querySets(spark, dir, withBucketKeys(sets, "shset", "keys", meta.numHashes, meta.bands)
+      .select(col("id").as("id_new"), col("shset").as("set_new"), col("keys"))
+      .localCheckpoint(), // feeds the bucket probe AND the verify join
+      threshold, excludeBatch, meta, broadcastRowLimit)
+  }
 
-  private[graft] def queryBatchWith(
+  /** [[queryBatch]] over `keyed`, a MATERIALIZED frame of the batch's
+    * (id_new, set_new, keys): its sets and [[withBucketKeys]] keys. */
+  private def querySets(
       spark: SparkSession,
       dir: String,
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
+      keyed: DataFrame,
       threshold: Double,
       excludeBatch: Option[Long],
       meta: LshMeta,
-      broadcastRowLimit: Long = ProbeBroadcastRowLimit,
-      /** pre-shingled, MATERIALIZED (id, shset) frame for the batch (the
-        * [[shingleSets]] output) — streaming shells pass it so one
-        * shingle pass per trigger feeds probe, pair search, and fold. */
-      preSets: Option[DataFrame] = None
+      broadcastRowLimit: Long = ProbeBroadcastRowLimit
   ): DataFrame = {
-    def visible(df: DataFrame): DataFrame =
-      excludeBatch.fold(df)(b => df.filter(col("batch") =!= b && col("src_batch") =!= b))
-    val newSets = preSets
-      .map(_.select(col("id").as("id_new"), col("shset").as("set_new")))
-      .getOrElse(shingleSets(batch, idCol, textCol, meta.n)
-        .select(col("id").as("id_new"), col("shset").as("set_new"))
-        .localCheckpoint()) // feeds the bucket probe AND the verify join
+    def visible(df: DataFrame): DataFrame = StreamIndex.visible(df, excludeBatch)
+    val newSets = keyed.select("id_new", "set_new")
     // size gate on the materialized batch (one cheap agg over the
     // checkpointed blocks): rows AND payload elements — a row count
     // alone under-gates set-expanded payloads (131k docs of ~1000
@@ -418,15 +346,17 @@ object LshIndex {
     val hinted = stats0.getLong(0) <= broadcastRowLimit &&
       stats0.getLong(1) * EstimatedShingleBytes <= ProbeBroadcastByteLimit
     def maybeBroadcast(df: DataFrame): DataFrame = if (hinted) broadcast(df) else df
-    val newBuckets = bucketRows(newSets, "id_new", "set_new", meta.numHashes, meta.bands)
-    val index = visible(readBuckets(spark, dir, meta.gen))
+    val newBuckets = keyRows(keyed, "id_new", "keys")
+    val index = visible(StreamIndex.read(spark, s"$dir/${meta.gen}/buckets.parquet",
+      bucketsSchema))
     // batch side broadcast: the corpus-sized index never shuffles
     val candidates = index
       .join(maybeBroadcast(newBuckets), Seq("band", "bh"))
       .select(col("id_new"), col("id").as("id_indexed"))
       .distinct()
       .localCheckpoint() // feeds the verify join AND its own size gate
-    val storedSets = visible(readShingles(spark, dir, meta.gen))
+    val storedSets = visible(StreamIndex.read(spark, s"$dir/${meta.gen}/shingles.parquet",
+      shinglesSchema))
       .select(col("id").as("id_indexed"), col("shset").as("set_indexed"))
     // the verify side is CANDIDATE-sized, not batch-sized — bucket
     // collisions scale with batch × corpus, so the hint must be gated on
@@ -499,5 +429,48 @@ object LshIndex {
     // already rules the replay out; re-running compact repairs the meta
     writeMeta(spark, dir, m.n, m.numHashes, m.bands, m.gen,
       math.max(m.compactedThrough, upToBatch))
+  }
+
+  /** This index as the streaming dedup shell drives it ([[StreamIndex]]):
+    * the payload is the shingle set, keys are [[withBucketKeys]], verify is
+    * exact Jaccard; the distributed arm shingles and signs the batch once,
+    * spread, and probes, pairs and folds from that. */
+  private[graft] def stream(spark: SparkSession, dir: String, idCol: String, textCol: String,
+      threshold: Double): StreamIndex[Set[String]] =
+    new Stream(spark, dir, readMeta(spark, dir), idCol, textCol, threshold)
+
+  private final class Stream(spark: SparkSession, dir: String, meta: LshMeta, idCol: String,
+      textCol: String, threshold: Double) extends StreamIndex[Set[String]](spark,
+      (s"$dir/${meta.gen}/buckets.parquet", s"$dir/${meta.gen}/shingles.parquet"),
+      (bucketsSchema, shinglesSchema), meta.compactedThrough) {
+    import StreamIndex._
+    def features(batch: DataFrame): DataFrame = {
+      IntegralId.require(batch, idCol, "LshIndex")
+      val x = batch.withColumn(FeatId, col(idCol).cast("long"))
+        .withColumn(FeatX, Dedup.shingles(col(textCol), meta.n))
+        // sub-n-token docs (empty sets) are unindexable — see shingleSets
+        .withColumn(FeatX, when(size(col(FeatX)) > 0, col(FeatX)))
+      withBucketKeys(x, FeatX, FeatKeys, meta.numHashes, meta.bands)
+    }
+    def payloadBytes(x: Column): Column = size(x).cast("long") * EstimatedShingleBytes
+    def driverArm: Boolean = true
+    def groupCap: Int = Dedup.GroupMaxBucket
+    def verifyForm(x: Any): Set[String] = x.asInstanceOf[scala.collection.Seq[String]].toSet
+    def similar(a: Set[String], b: Set[String]): Boolean = {
+      val isect = a.count(b)
+      isect.toDouble / (a.size + b.size - isect).toDouble >= threshold
+    }
+    def prepare(batch: DataFrame): DataFrame =
+      features(graft.operators.HotPath.spreadIfNarrow(batch)).filter(col(FeatKeys).isNotNull).pin()
+    def crossDups(prepared: DataFrame, batchId: Long): DataFrame =
+      querySets(spark, dir, prepared.select(col(FeatId).as("id_new"), col(FeatX).as("set_new"),
+        col(FeatKeys).as("keys")), threshold, Some(batchId), meta)
+    def withinPairs(prepared: DataFrame): DataFrame =
+      Dedup.minhashLshPairsFromSets(prepared.select(col(FeatId).as("id"), col(FeatX).as("shset")),
+        numHashes = meta.numHashes, bands = meta.bands, threshold = threshold,
+        maxBucket = Dedup.GroupMaxBucket).select("id_a", "id_b")
+    def append(survivors: DataFrame, batchId: Long): Unit =
+      fold(tagged(survivors.select(FeatId, FeatX, FeatKeys), batchId), batchId)
+    def compact(upToBatch: Long): Unit = LshIndex.compact(spark, dir, upToBatch)
   }
 }
