@@ -39,13 +39,6 @@ object SparkEntry {
 
   // ---- helpers --------------------------------------------------------
 
-  private def configure(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-  }
-
   private def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
@@ -126,7 +119,8 @@ object SparkEntry {
 
   /** Flagship: full ingest pipeline on sf0.001 (driver smoke-checks rows>0). */
   def entry(spark: SparkSession): DataFrame = {
-    configure(spark)
+    // the caller built the session: keep its shuffle parallelism
+    GraftSession.configure(spark, spark.conf.get("spark.sql.shuffle.partitions").toInt)
     qIngestAppend(spark, "/root/testdata/sf0.001")
   }
 
@@ -2717,7 +2711,7 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2 (+ extensions). */
   def queries: Map[String, (SparkSession, String) => DataFrame] = {
     def wrap(f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-      (s, d) => { configure(s); f(s, d) }
+      (s, d) => { GraftSession.configure(s, s.conf.get("spark.sql.shuffle.partitions").toInt); f(s, d) }
     Map(
       "ingest_append" -> wrap(qIngestAppend),
       "ingest_partitioned" -> wrap(qIngestPartitioned),

@@ -59,7 +59,7 @@ private[graft] object ControlFs {
     b.result()
   }
   /** Tally an engine-side (non-primitive) phase — e.g. the writer's
-    * footer-stats pass — into the same profile. */
+    * `sparkWriteJob` — into the same profile. */
   private[graft] def timedOp[A](op: String)(f: => A): A = timed(op)(f)
 
   /** The active session's Hadoop conf (it carries `fs.*.impl` bindings

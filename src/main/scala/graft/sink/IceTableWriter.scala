@@ -1,23 +1,11 @@
 package graft.sink
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.fs.ControlFs
 import graft.table.{Commit, FileEntry, IceTable}
 import graft.operators.{HotPath, PartitionTransforms}
-
-/** Footer-derived stats for one staged file (public shape so the
-  * distributed stats job can use a product encoder).
-  */
-final case class FooterStats(
-    rows: Long,
-    bytes: Long,
-    min: Map[String, String],
-    max: Map[String, String])
 
 /** Physical write path: stages immutable files under the table directory
   * and publishes them with one atomic commit-log entry.
@@ -34,7 +22,10 @@ final case class FooterStats(
   *    with batchId replay guard (K8)
   *
   * Files are written once and referenced by path — no renames — so the
-  * same design works on object storage at cluster scale.
+  * same design works on object storage at cluster scale. The write job
+  * returns its own file list with per-file stats
+  * ([[ManifestCommitProtocol]]): the writer never lists or re-reads what
+  * it staged.
   */
 object IceTableWriter {
 
@@ -255,8 +246,8 @@ object IceTableWriter {
     val meta = table.meta
     val schema = table.schema
     val schemaVersion = table.currentSchemaVersion
-    val uuid = java.util.UUID.randomUUID().toString
-    val outDir = s"${table.dir}/data/$uuid"
+    ManifestCommitProtocol.requireInstalled(df.sparkSession)
+    val outDir = s"${table.dir}/data/${java.util.UUID.randomUUID()}"
     markStaging(outDir) // gc skips this dir until publish clears the marker
 
     // P5 — `write.target-file-size-bytes` parity (Utilities.java:162-167):
@@ -361,35 +352,20 @@ object IceTableWriter {
         w = w.option("compression", codec.toLowerCase(java.util.Locale.ROOT))
       }
     }
-    ControlFs.timedOp("sparkWriteJob") {
-      if (fanoutFloor) IceTableWriter.withFanoutCoalesceFloor(df.sparkSession)(w.save(outDir))
-      else w.save(outDir)
+    val written = ControlFs.timedOp("sparkWriteJob") {
+      if (fanoutFloor)
+        IceTableWriter.withFanoutCoalesceFloor(df.sparkSession)(ManifestCommitProtocol.save(w, outDir))
+      else ManifestCommitProtocol.save(w, outDir)
     }
-
-    val staged = listStagedFiles(outDir, meta.format)
-    val stats = fillUnknownRows(df.sparkSession,
-      fileStats(df.sparkSession, staged, meta.format), meta.format)
-    // Unstage zero-row files: FileFormatWriter creates part files EAGERLY
-    // (an empty unpartitioned batch stages one per task), and committing
-    // them bloats the log and every subsequent read's file list — a
-    // dead-letter stream with clean batches would otherwise accumulate
-    // thousands of empty files. Footer-less formats get their counts
-    // from the read-back job above, so rows is authoritative here.
-    val (files, zeroRow) = staged.partition(p => stats(p).rows != 0L)
-    zeroRow.foreach(ControlFs.delete(_, recursive = false))
-    // an all-zero-row stage publishes nothing — nothing will ever clear
-    // this dir's marker, so clear it here (gc reclaims the dir normally)
-    if (files.isEmpty) clearStaging(outDir)
-    val entries = files.map { p =>
-      val s = stats(p)
+    val entries = unstageEmpty(written, outDir).map { f =>
       FileEntry(
-        path = p,
-        rows = s.rows,
+        path = f.path,
+        rows = f.stats.rows,
         schemaVersion = schemaVersion,
-        partition = partitionValues(outDir, p, transforms),
-        bytes = s.bytes,
-        min = s.min,
-        max = s.max,
+        partition = partitionValues(f.partitionDir, transforms),
+        bytes = f.stats.bytes,
+        min = f.stats.min,
+        max = f.stats.max,
         format = meta.format
       )
     }
@@ -416,237 +392,31 @@ object IceTableWriter {
       }
   }
 
-  /** Per-file stats (rows, bytes, column bounds) from parquet footers +
-    * fs metadata. Small commits read on the driver (parallel, one open per
-    * file — no job overhead); large commits run a metadata-only Spark job
-    * so the driver never serializes on thousands of footer opens (the
-    * per-file stats collection pattern used by table-format migration
-    * jobs).
-    */
-  private val DriverFooterLimit = 512
-
-  /** Fill real row counts for footer-less formats (avro reports
-    * rows = -1). Without them, zero-row unstaging cannot see emptiness:
-    * FileFormatWriter's eager empty part files would be KEPT, and an
-    * empty `overwritePartitions` batch — whose unknown-row file "touches"
-    * the empty partition tuple — would supersede every live file of an
-    * unpartitioned table: a silent full TRUNCATION. One read-back job
-    * over only the unknown files fills per-file counts; the read uses
-    * the same data source as the write, so if the write succeeded the
-    * read does too. Files absent from the grouped count carry zero
-    * records — exactly the eager-empty ones.
-    */
-  private[graft] def fillUnknownRows(
-      spark: SparkSession,
-      stats: Map[String, FooterStats],
-      format: String
-  ): Map[String, FooterStats] =
-    if (stats.valuesIterator.forall(_.rows >= 0L)) stats
-    else {
-      val unknown = stats.collect { case (p, s) if s.rows < 0L => p }.toSeq
-      val counts = spark.read.format(format).load(unknown: _*)
-        .groupBy(org.apache.spark.sql.functions.input_file_name().as("__f"))
-        .count()
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1)))
-        .toMap
-      mergeReadBackCounts(stats, counts)
-    }
-
-  /** Merge read-back counts into unknown-row stats, keyed by the FULL
-    * decoded path: `input_file_name()` returns URI form (`file:///…`,
-    * percent-escaped) while staged paths are filesystem form —
-    * `URI.getPath` decodes back to the same absolute path. NOT keyed by
-    * trailing file name: Spark's dynamic-partition writer reuses one
-    * task's `part-NNNNN-<uuid>` name in EVERY partition directory it
-    * writes, so names collide across a partitioned stage and the counts
-    * would silently cross-attach.
-    */
-  private[graft] def mergeReadBackCounts(
-      stats: Map[String, FooterStats],
-      counts: Map[String, Long]
-  ): Map[String, FooterStats] = {
-    def keyOf(p: String): String =
-      if (p.matches("^[a-zA-Z][a-zA-Z0-9+.-]*:.*"))
-        // encoded URI form (input_file_name) decodes via java.net.URI;
-        // a DECODED scheme-ful listing path (Hadoop Path.toString) can
-        // carry characters java.net.URI rejects — Hadoop Path re-encodes
-        // it, and getPath decodes both down to the same plain path
-        try new java.net.URI(p).getPath
-        catch {
-          case _: Exception =>
-            try new org.apache.hadoop.fs.Path(p).toUri.getPath
-            catch { case _: Exception => p }
-        }
-      else p
-    val byPath = counts.map { case (p, n) => keyOf(p) -> n }
-    stats.map { case (p, s) =>
-      if (s.rows >= 0L) (p, s) else (p, s.copy(rows = byPath.getOrElse(keyOf(p), 0L)))
-    }
-  }
-
-  private def fileStats(
-      spark: SparkSession,
-      files: Seq[String],
-      format: String
-  ): Map[String, FooterStats] = ControlFs.timedOp("footerStatsPass") {
-    if (files.size <= DriverFooterLimit) {
-      // resolve the session conf ONCE on the calling thread — the fork-
-      // join pool's threads may not carry the active session, and the
-      // footer opens must see the session's fs.* bindings/credentials
-      val conf = ControlFs.conf
-      val out = new java.util.concurrent.ConcurrentHashMap[String, FooterStats]()
-      files.asJava.parallelStream().forEach { p =>
-        out.put(p, footerStats(p, format, conf))
-      }
-      out.asScala.toMap
-    } else {
-      val fmt = format
-      // executors rebuild the driver's Hadoop conf from its serialized
-      // entries (a bare `new Configuration()` on an executor would miss
-      // session-level fs.* bindings and object-store credentials)
-      val confEntries: Seq[(String, String)] =
-        ControlFs.conf.iterator().asScala.map(e => (e.getKey, e.getValue)).toSeq
-      import org.apache.spark.sql.{Encoders => E}
-      spark
-        .createDataset(files)(E.STRING)
-        .repartition(math.min(files.size, 512))
-        .mapPartitions { it =>
-          val conf = new Configuration()
-          confEntries.foreach { case (k, v) => conf.set(k, v) }
-          it.map(p => (p, footerStats(p, fmt, conf)))
-        }(E.product[(String, FooterStats)])
-        .collect()
-        .toMap
-    }
-  }
-
-  /** Rows + size + per-top-level-column min/max bounds from one file
-    * footer (no data read). Parquet and ORC both carry footer statistics;
-    * other formats (avro) record size only — rows = -1 and no bounds, so
-    * pruning degrades to "may contain" and the byte-rolling estimate
-    * skips the file, never a wrong skip.
-    *
-    * Bounds are recorded only for columns with valid statistics in EVERY
-    * row group / stripe; nested paths and raw binary are skipped.
-    */
-  private[sink] def footerStats(p: String, format: String, conf: Configuration): FooterStats = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    val size = hp.getFileSystem(conf).getFileStatus(hp).getLen
-    if (format == "orc") return orcStats(p, size, conf)
-    if (format != "parquet") return FooterStats(-1L, size, Map.empty, Map.empty)
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hp, conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val blocks = r.getFooter.getBlocks.asScala.toSeq
-      val merged = scala.collection.mutable.LinkedHashMap[
-        String, org.apache.parquet.column.statistics.Statistics[_]]()
-      val invalid = scala.collection.mutable.Set[String]()
-      blocks.foreach { b =>
-        b.getColumns.asScala.foreach { c =>
-          val pathParts = c.getPath.toArray
-          if (pathParts.length == 1) {
-            val name = pathParts(0)
-            val st: org.apache.parquet.column.statistics.Statistics[_ <: Comparable[_]] =
-              c.getStatistics
-            val pt = c.getPrimitiveType
-            val encodable = pt.getPrimitiveTypeName match {
-              case INT32 | INT64 | FLOAT | DOUBLE | BOOLEAN => true
-              case BINARY =>
-                pt.getLogicalTypeAnnotation
-                  .isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-              case _ => false
-            }
-            if (st == null || st.isEmpty || !st.hasNonNullValue || !encodable) {
-              invalid += name; ()
-            } else {
-              merged.get(name) match {
-                case None => merged(name) = st
-                case Some(acc) =>
-                  // erased cast to a concrete type param so the invariant
-                  // Java generic accepts the same-column merge
-                  type S = org.apache.parquet.column.statistics.Statistics[java.lang.Long]
-                  acc.asInstanceOf[S].mergeStatistics(st.asInstanceOf[S])
-              }
-            }
-          }
-        }
-      }
-      def enc(v: Any): String = v match {
-        case b: org.apache.parquet.io.api.Binary => b.toStringUsingUTF8
-        case other                               => String.valueOf(other)
-      }
-      val valid = merged.view.filterKeys(!invalid.contains(_))
-      FooterStats(
-        rows = r.getRecordCount,
-        bytes = size,
-        min = valid.map { case (k, s) => k -> enc(s.genericGetMin) }.toMap,
-        max = valid.map { case (k, s) => k -> enc(s.genericGetMax) }.toMap
-      )
-    } finally r.close()
-  }
-
-  /** ORC footer statistics (P5 three-format parity with the reference's
-    * symmetric parquet/ORC/avro appenders, `data/Utilities.java:162-167`):
-    * row count from the reader, per-top-level-column bounds from the
-    * file-level `ColumnStatistics`, string-encoded the same way as the
-    * parquet path so [[graft.table.FilePruning]] compares them uniformly.
-    * Only integer/floating/string stats are recorded (same conservative
-    * class as parquet); anything else simply carries no bound.
-    */
-  private[sink] def orcStats(p: String, size: Long, conf: Configuration): FooterStats = {
-    import org.apache.orc.{OrcFile, TypeDescription}
-    val reader = OrcFile.createReader(
-      new org.apache.hadoop.fs.Path(p), OrcFile.readerOptions(conf))
-    try {
-      val schema = reader.getSchema
-      val mins = scala.collection.mutable.LinkedHashMap[String, String]()
-      val maxs = scala.collection.mutable.LinkedHashMap[String, String]()
-      if (schema.getCategory == TypeDescription.Category.STRUCT) {
-        val stats = reader.getStatistics // indexed by column id; 0 = root struct
-        val names = schema.getFieldNames.asScala.toSeq
-        val children = schema.getChildren.asScala.toSeq
-        names.zip(children).foreach { case (name, child) =>
-          val s = stats(child.getId)
-          if (s != null && s.getNumberOfValues > 0) s match {
-            case i: org.apache.orc.IntegerColumnStatistics =>
-              mins(name) = String.valueOf(i.getMinimum)
-              maxs(name) = String.valueOf(i.getMaximum)
-            case d: org.apache.orc.DoubleColumnStatistics =>
-              mins(name) = String.valueOf(d.getMinimum)
-              maxs(name) = String.valueOf(d.getMaximum)
-            // BOTH sides must be present: ORC truncates string stats per
-            // side (values > 1024 bytes record only lower/upper bounds and
-            // the exact min/max return null independently)
-            case st: org.apache.orc.StringColumnStatistics
-                if st.getMinimum != null && st.getMaximum != null =>
-              mins(name) = st.getMinimum
-              maxs(name) = st.getMaximum
-            case _ => () // no bound recorded — pruner treats as "may contain"
-          }
-        }
-      }
-      FooterStats(reader.getNumberOfRows, size, mins.toMap, maxs.toMap)
-    } finally reader.close()
-  }
-
   private def writeDeleteFiles(keysDf: DataFrame, table: IceTable): Seq[FileEntry] = {
+    ManifestCommitProtocol.requireInstalled(keysDf.sparkSession)
     val meta = table.meta
-    val uuid = java.util.UUID.randomUUID().toString
-    val outDir = s"${table.dir}/deletes/$uuid"
+    val outDir = s"${table.dir}/deletes/${java.util.UUID.randomUUID()}"
     markStaging(outDir)
-    keysDf.write.format(meta.format).mode("append").save(outDir)
+    val written = ManifestCommitProtocol.save(keysDf.write.format(meta.format).mode("append"), outDir)
     // same zero-row unstaging as writeFiles: an empty delete side stages
     // an eager empty part file that would burden every later read's
     // anti-join planning for nothing
-    val conf = ControlFs.conf
-    val entries = listStagedFiles(outDir, meta.format).map { p =>
-      FileEntry(p, rowCount(p, meta.format, conf), table.currentSchemaVersion,
-        bytes = ControlFs.status(p).map(_.getLen).getOrElse(-1L), format = meta.format)
+    unstageEmpty(written, outDir).map { f =>
+      FileEntry(f.path, f.stats.rows, table.currentSchemaVersion,
+        bytes = f.stats.bytes, format = meta.format)
     }
-    val (live, zeroRow) = entries.partition(_.rows != 0L)
+  }
+
+  /** Unstage zero-row files and return the rest in path order.
+    * FileFormatWriter creates part files EAGERLY (an empty unpartitioned
+    * batch stages one per task), and committing them bloats the log and
+    * every subsequent read's file list — a dead-letter stream with clean
+    * batches would otherwise accumulate thousands of empty files. An
+    * all-zero-row stage publishes nothing, so nothing would ever clear
+    * its marker: it is cleared here (gc reclaims the dir normally).
+    */
+  private def unstageEmpty(written: Seq[WrittenFile], outDir: String): Seq[WrittenFile] = {
+    val (live, zeroRow) = written.sortBy(_.path).partition(_.stats.rows != 0L)
     zeroRow.foreach(f => ControlFs.delete(f.path, recursive = false))
     if (live.isEmpty) clearStaging(outDir)
     live
@@ -785,108 +555,18 @@ object IceTableWriter {
     committed
   }
 
-  /** List the files a just-finished write job staged under `dir`,
-    * defending against LIST-after-write lag (object stores without
-    * consistent listings): a lagged listing here would silently commit an
-    * EMPTY or partial file set — data loss with a green trigger. The
-    * committer wrote `_SUCCESS` into `dir` strictly BEFORE `save()`
-    * returned (default `mapreduce.fileoutputcommitter.marksuccessfuljobs`),
-    * so a listing that cannot see `_SUCCESS` yet is PROVABLY stale — wait
-    * (bounded backoff, ~1.5 s) for the namespace to catch up, and if it
-    * never does, FAIL the write: by this function's own reasoning the
-    * listing is known-stale, and committing whatever lists would be
-    * exactly the silent empty/partial commit the guard exists to prevent.
-    * The staged files stay protected by the staging marker, the trigger
-    * fails loudly, and the batch replays exactly-once (batchId fence) —
-    * strictly safer than a green trigger over lost data. Residual
-    * boundary, documented in OPERATIONS.md: a listing that shows
-    * `_SUCCESS` but still hides some part files is not client-detectable —
-    * the engine's filesystem contract requires listings to be consistent
-    * once they include the job's last-written file (true of every current
-    * major store: S3 since 2020, GCS, ADLS, HDFS).
-    * ObjectStoreSemanticsSuite drives both the catches-up arm and the
-    * never-listable (throw) arm deterministically.
-    */
-  private def listStagedFiles(dir: String, format: String): Seq[String] = {
-    if (ControlFs.conf.getBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", true)) {
-      var delay = 50L
-      var attempt = 0
-      while (attempt < 6 && !ControlFs.listNames(dir).contains("_SUCCESS")) {
-        attempt += 1
-        if (attempt == 6)
-          throw new java.io.IOException(s"staged dir $dir still does not list the " +
-            "committer's _SUCCESS after ~1.5s of bounded backoff — the listing is " +
-            "provably lagging the write, and committing it could silently publish an " +
-            "empty or partial file set. Failing the trigger; the batch replays " +
-            "exactly-once (see OPERATIONS.md on listing consistency)")
-        else Thread.sleep(delay)
-        delay *= 2
-      }
-    }
-    listDataFiles(dir, format)
-  }
-
-  private def listDataFiles(dir: String, format: String): Seq[String] = {
-    val suffix = format match {
-      case "parquet" => ".parquet"
-      case "orc"     => ".orc"
-      case "avro"    => ".avro"
-      case _         => ""
-    }
-    ControlFs
-      .walkPostOrder(dir)
-      .filter(_.isFile)
-      .map(_.getPath.toString)
-      .filter { p =>
-        val n = p.substring(p.lastIndexOf('/') + 1)
-        !n.startsWith("_") && !n.startsWith(".") && (suffix.isEmpty || n.endsWith(suffix))
-      }
-      .sorted
-  }
-
-  /** Exact row count from the file footer (no data read); -1 for formats
-    * without a readable footer. Shared with [[graft.table.IceTable.fsck]].
-    * Callers resolve `conf` once (ControlFs.conf) and reuse it across a
-    * batch of files — a per-file Configuration costs tens of ms of XML
-    * parsing and dominated commit time at many files.
-    */
-  private[graft] def rowCount(p: String, format: String, conf: Configuration): Long =
-    format match {
-      case "parquet" =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(p), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount
-        finally r.close()
-      case "orc" =>
-        val r = org.apache.orc.OrcFile.createReader(
-          new org.apache.hadoop.fs.Path(p),
-          org.apache.orc.OrcFile.readerOptions(conf))
-        try r.getNumberOfRows
-        finally r.close()
-      case _ => -1L
-    }
-
-  /** Recover `name=value` partition values from the staged hive layout.
+  /** Partition values from the Hive-style dir a file was written under.
     * Decode with Spark's own `unescapePathName` (the exact inverse of the
     * writer's Hive-style escaping) — URLDecoder would additionally turn a
     * literal '+' into a space, corrupting the recorded value and breaking
     * partition-pruning predicates against it.
     */
   private def partitionValues(
-      root: String,
-      file: String,
+      dir: String,
       transforms: Seq[graft.operators.PartitionTransform]
   ): Map[String, String] = {
     val writeToField = transforms.map(t => t.writeName -> t.fieldName).toMap
-    // scheme-normalize both sides before relativizing: the staged root is
-    // the caller's spelling, the listed file the filesystem's
-    val rootNorm = IceTable.normalizePath(root).stripSuffix("/")
-    val fileNorm = IceTable.normalizePath(file)
-    val rel =
-      if (fileNorm.startsWith(rootNorm + "/")) fileNorm.drop(rootNorm.length + 1)
-      else fileNorm
-    rel
+    dir
       .split('/')
       .iterator
       .filter(_.contains("="))

@@ -982,7 +982,7 @@ final class IceTable private[table] (
               s"recorded ${f.bytes} bytes, found $sz"))
           else if (f.rows >= 0 && (fmt == "parquet" || fmt == "orc")) {
             val actual =
-              try graft.sink.IceTableWriter.rowCount(f.path, fmt, fsckConf)
+              try graft.sink.ManifestCommitProtocol.footerStats(f.path, fmt, fsckConf).rows
               catch { case _: Exception => -1L }
             if (actual != f.rows)
               problemList.add(Row(f.path, seq, kind, "row-mismatch",

@@ -28,7 +28,7 @@ import graft.fs.ControlFs
   *      between jobs on the driver;
   *   2. the CONTROL-PLANE split: the run's [[ControlFs.profileSnapshot]]
   *      delta — count, ms and µs/op per filesystem primitive (plus the
-  *      writer's `sparkWriteJob`/`footerStatsPass` phases), sorted by ms,
+  *      writer's `sparkWriteJob` phase), sorted by ms,
   *      and their total (ops overlapped by `HotPath` each count in full);
   *   3. the EXECUTED PLANS: `.work/profile-plans/<query>_run<r>.txt` holds
   *      the formatted, AQE-final plan of every execution the run's session

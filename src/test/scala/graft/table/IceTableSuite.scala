@@ -340,7 +340,7 @@ class IceTableSuite extends AnyFunSuite {
       } finally w.close()
     }
     assert(leftovers.isEmpty, s"publish left staging markers: $leftovers")
-    t.gc(olderThanMs = 0L) // drop the append's _SUCCESS/.crc bookkeeping
+    t.gc(olderThanMs = 0L) // drop the append's .crc bookkeeping
     // in-flight long write: part file ALREADY older than the orphan age,
     // marker fresh — pre-fix, age-based gc deleted the file mid-job and
     // the eventual commit referenced a vanished path
@@ -359,32 +359,6 @@ class IceTableSuite extends AnyFunSuite {
       FileTime.fromMillis(System.currentTimeMillis() - 7L * 60 * 60 * 1000))
     assert(t.gc(olderThanMs = 0L) >= 1)
     assert(!Files.exists(part))
-  }
-
-  test("read-back counts merge fills only unknown-row stats, keyed by file name") {
-    val stats = Map(
-      "/tbl/data/u1/part-0.parquet" -> graft.sink.FooterStats(5L, 100L, Map.empty, Map.empty),
-      "/tbl/data/u1/part-1.avro" -> graft.sink.FooterStats(-1L, 80L, Map.empty, Map.empty),
-      "/tbl/data/u1/part-2.avro" -> graft.sink.FooterStats(-1L, 60L, Map.empty, Map.empty))
-    // input_file_name() URI form on the counted side; part-2 absent = an
-    // eager empty part file (no records grouped) → 0 rows → unstaged
-    val counts = Map("file:///tbl/data/u1/part-1.avro" -> 7L)
-    val merged = IceTableWriter.mergeReadBackCounts(stats, counts)
-    assert(merged("/tbl/data/u1/part-0.parquet").rows === 5L)
-    assert(merged("/tbl/data/u1/part-1.avro").rows === 7L)
-    assert(merged("/tbl/data/u1/part-2.avro").rows === 0L)
-    // dynamic-partition fan-out reuses ONE task's part-file name in every
-    // partition dir — full-path keying must keep the counts apart (a
-    // name-keyed merge silently cross-attached them)
-    val partStats = Map(
-      "/tbl/data/u1/p=1/part-0.avro" -> graft.sink.FooterStats(-1L, 10L, Map.empty, Map.empty),
-      "/tbl/data/u1/p=2/part-0.avro" -> graft.sink.FooterStats(-1L, 10L, Map.empty, Map.empty))
-    val partCounts = Map(
-      "file:///tbl/data/u1/p=1/part-0.avro" -> 5L,
-      "file:///tbl/data/u1/p=2/part-0.avro" -> 3L)
-    val m2 = IceTableWriter.mergeReadBackCounts(partStats, partCounts)
-    assert(m2("/tbl/data/u1/p=1/part-0.avro").rows === 5L)
-    assert(m2("/tbl/data/u1/p=2/part-0.avro").rows === 3L)
   }
 
   test("optimistic commit: concurrent writers race on seq, none lost") {
@@ -479,7 +453,7 @@ class IceTableSuite extends AnyFunSuite {
     val preRewrite = t.readAt(spark, 5)
     assert(preRewrite.count() === before.map(_._1.rows).sum)
     // ...and gc must NOT reclaim them (they back that time travel; it may
-    // still sweep writer bookkeeping like _SUCCESS/.crc)
+    // still sweep writer bookkeeping like .crc files)
     val originals = before.map(_._1.path)
     t.gc(olderThanMs = 0L)
     assert(originals.forall(p => java.nio.file.Files.exists(localPath(p))))
@@ -1218,7 +1192,7 @@ class IceTableSuite extends AnyFunSuite {
       java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
         .count(p => p.getFileName.toString.endsWith(".parquet"))
     }
-    t.gc(olderThanMs = 0L) // only writer bookkeeping (_SUCCESS/.crc) is orphaned pre-compaction
+    t.gc(olderThanMs = 0L) // only writer bookkeeping (.crc) is orphaned pre-compaction
     val before = parquetFiles()
     assert(t.read(spark).count() === 2)
     t.compact(spark)

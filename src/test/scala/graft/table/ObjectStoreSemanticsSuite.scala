@@ -150,23 +150,30 @@ class ObjectStoreSemanticsSuite extends AnyFunSuite {
     assert(t.read(spark).count() === 3L)
   }
 
-  test("staged-file listing lag that NEVER clears: publish fails loudly instead of " +
-    "committing a known-stale (possibly empty) listing; the batch then replays exactly-once") {
+  test("staged-file listing lag that NEVER clears: the append publishes every row " +
+    "from the write job's own manifest; the batch's replay is fenced") {
     val dir = s"${osDir("osfs-stale")}/tbl"
     val t = IceTable.create(dir, schema, TableMeta())
     ObjectStoreTestFs.armListLag()
-    val ex = try {
-      intercept[java.io.IOException] {
-        // the write job itself succeeds (HEAD/GET are consistent); only the
-        // final-location listing lags — publish must refuse to commit it
-        IceTableWriter.append(spark, df((1L, "a"), (2L, "b")), t, batchId = 0)
+    val c = try {
+      // the write job itself succeeds (HEAD/GET are consistent) and its
+      // final-location files never list while the lag holds — the writer
+      // takes its file set from the commit protocol, not from a listing
+      val c = IceTableWriter.append(spark, df((1L, "a"), (2L, "b")), t, batchId = 0)
+      assert(c.isDefined)
+      c.get.dataFiles.foreach { f =>
+        val p = new org.apache.hadoop.fs.Path(f.path)
+        assert(ControlFs.exists(f.path), s"committed file must exist: ${f.path}")
+        assert(!ControlFs.listNames(p.getParent.toString).contains(p.getName),
+          s"the lag must hide the committed file from LIST: ${f.path}")
       }
+      c.get
     } finally ObjectStoreTestFs.reset()
-    assert(ex.getMessage.contains("_SUCCESS"),
-      s"failure must name the provably-stale listing, got: ${ex.getMessage}")
-    assert(t.read(spark).count() === 0L, "a failed trigger must publish nothing")
-    // replay after the namespace recovers: same batchId commits exactly once
-    assert(IceTableWriter.append(spark, df((1L, "a"), (2L, "b")), t, batchId = 0).isDefined)
+    assert(c.dataFiles.map(_.rows).sum === 2L,
+      s"every row must be committed although nothing listed: ${c.dataFiles}")
+    // the namespace flushes: the commit reads back in full
+    assert(t.read(spark).count() === 2L)
+    // replay of the same batch: fenced, nothing doubles
     assert(IceTableWriter.append(spark, df((1L, "a"), (2L, "b")), t, batchId = 0).isEmpty)
     assert(t.read(spark).count() === 2L)
   }
