@@ -202,12 +202,10 @@ object MongoDebezium {
     // reason); late-appearing fields ride schema evolution next batch
     val hasImage = col("before").isNotNull || col("after").isNotNull ||
       (if (hasUpdate) col("updateDescription.updatedFields").isNotNull else lit(false))
-    val sampleSrc0 = df.filter(hasImage)
-    val sampleSrc = if (inferLimit > 0) sampleSrc0.limit(inferLimit) else sampleSrc0
-    val samples =
-      if (hasUpdate)
-        sampleSrc.select(explode(array(beforeJ, afterJ, updJ)).as("j"))
-      else sampleSrc.select(explode(array(beforeJ, afterJ)).as("j"))
+    val images = df.filter(hasImage)
+      .select(array(Seq(beforeJ, afterJ) ++ (if (hasUpdate) Seq(updJ) else Nil): _*).as("js"))
+    val sampleSrc = if (inferLimit > 0) Transforms.firstRows(images, inferLimit) else images
+    val samples = sampleSrc.select(explode(col("js")).as("j"))
     val schema = df.sparkSession.read
       .json(samples.filter(col("j").isNotNull).as[String]).schema
     val clean = StructType(schema.fields.filterNot(_.name.startsWith("_corrupt")))

@@ -67,9 +67,9 @@ object Transforms {
     * Inferred fields are promoted to top level alongside existing columns.
     *
     * `inferLimit` bounds the inference scan to the first N records
-    * (default 4096): fields first appearing later in the batch parse as
-    * null for that batch and are picked up by schema evolution on the
-    * next one — the bounded-scan trade-off. `inferLimit <= 0` opts into
+    * (default 4096, [[firstRows]]): fields first appearing later in the
+    * batch parse as null for that batch and are picked up by schema
+    * evolution on the next one — the bounded-scan trade-off. `inferLimit <= 0` opts into
     * exact whole-batch inference, which is a second FULL scan of the
     * batch every trigger — at cluster scale that doubles every read, so
     * the bounded sample is the default, not the opt-in.
@@ -84,7 +84,7 @@ object Transforms {
       df: DataFrame): DataFrame = {
     import df.sparkSession.implicits._
     val base = df.select(col(jsonCol).cast(StringType)).filter(col(jsonCol).isNotNull)
-    val sample = if (inferLimit > 0) base.limit(inferLimit) else base
+    val sample = if (inferLimit > 0) firstRows(base, inferLimit) else base
     val schema = df.sparkSession.read.json(sample.as[String]).schema
     val cleaned = StructType(schema.fields.filterNot(_.name.startsWith("_corrupt")))
     // the payload IS the record: a promoted field REPLACES a same-named
@@ -100,6 +100,16 @@ object Transforms {
       // re-select as a literal column, not parse as a nested path
       .select(keep.map(c => col(s"`$c`")) ++ promoted.map(f => col(s"__j.`$f`").as(f)): _*)
   }
+
+  /** The first `n` rows of `df` in partition order — the rows `take(n)`
+    * returns — as a frame that never leaves the executors: one task reads
+    * the partitions in turn and stops at the `n`th row. Not `limit(n)`: a
+    * codegen'd limit names its counter from a JVM-wide sequence, so every
+    * plan carrying one compiles fresh classes on the driver and on the
+    * executors, every batch.
+    */
+  private[graft] def firstRows(df: DataFrame, n: Int): DataFrame =
+    df.sparkSession.createDataFrame(df.rdd.coalesce(1).mapPartitions(_.take(n)), df.schema)
 
   /** Debezium envelope flattener (`transforms/DebeziumTransform.java:75-178`).
     *

@@ -100,6 +100,23 @@ class TransformsSuite extends AnyFunSuite {
     assert(r.getLong(0) === 87L && r.getString(1) === "x" && r.getString(2) === "87")
   }
 
+  test("jsonExpand's sample is the first inferLimit records in partition order, read by one task") {
+    // four partitions of 50 records; "late" first appears at record 120
+    val acc = spark.sparkContext.longAccumulator("records read")
+    val read = udf((id: Long) => { acc.add(1); id })
+    val df = spark.range(0, 200, 1, 4).select(read(col("id")).as("id"))
+      .withColumn("j", when(col("id") < 120, format_string("{\"a\":%d}", col("id")))
+        .otherwise(format_string("{\"a\":%d,\"late\":1}", col("id"))))
+    val sample = Transforms.firstRows(df, 60)
+    assert(sample.rdd.getNumPartitions === 1)
+    assert(sample.collect().toSeq === df.take(60).toSeq)
+    acc.reset()
+    sample.count()
+    assert(acc.value <= 100L, "partitions past the 60th record were read")
+    assert(!Transforms.jsonExpand("j", inferLimit = 120)(df).columns.contains("late"))
+    assert(Transforms.jsonExpand("j", inferLimit = 121)(df).columns.contains("late"))
+  }
+
   test("jsonExpand heterogeneous-array rules vs JsonToMapUtils.arraySchema (C7 edge)") {
     import org.apache.spark.sql.types._
     val df = Seq(
