@@ -28,12 +28,31 @@ object GraftSession {
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
   private val warned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Apply engine settings to a builder: non-ANSI casts (the reference's
-    * permissive coercions, `data/RecordConverter.java:302-336`), UTC, AQE,
-    * local-appropriate shuffle parallelism, the file commit protocol
-    * that hands table writes their file manifest, the fork-free `file:`
-    * filesystem for both Hadoop APIs ([[graft.fs.LocalDataFs]]) and a
-    * generated-class cache that holds the engine's working set.
+  /** The runtime-settable SQL settings every engine session carries,
+    * applied by both [[builder]] and [[configure]]: non-ANSI casts (the
+    * reference's permissive coercions, `data/RecordConverter.java:302-336`),
+    * UTC, local-appropriate shuffle parallelism, AQE, microsecond parquet
+    * timestamps, and the file commit protocol that hands table writes
+    * their file manifest.
+    */
+  private[graft] def runtimeSettings(shufflePartitions: Int): Seq[(String, String)] = Seq(
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+    // harmless compatibility shim: on Spark builds that still read
+    // ns-precision parquet timestamps as a hard error, this turns them
+    // into epoch-nanos longs. On this Spark 4.1.2 install the conf is a
+    // silent no-op — consumers must NOT rely on it; all event-time access
+    // goes through the schema-adaptive SparkEntry.tsMicros/tsTimestamp.
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    ManifestCommitProtocol.ProtocolClassKey -> classOf[ManifestCommitProtocol].getName)
+
+  /** Apply engine settings to a builder: the [[runtimeSettings]], the
+    * fork-free `file:` filesystem for both Hadoop APIs
+    * ([[graft.fs.LocalDataFs]]) and a generated-class cache that holds
+    * the engine's working set.
     */
   def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder = {
     val b = SparkSession
@@ -41,26 +60,16 @@ object GraftSession {
       .master(master)
       .appName("graft")
       .withExtensions(new GraftExtensions)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // harmless compatibility shim: on Spark builds that still read
-      // ns-precision parquet timestamps as a hard error, this turns them
-      // into epoch-nanos longs. On this Spark 4.1.2 install the conf is a
-      // silent no-op — consumers must NOT rely on it; all event-time access
-      // goes through the schema-adaptive SparkEntry.tsMicros/tsTimestamp.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config(ManifestCommitProtocol.ProtocolClassKey, classOf[ManifestCommitProtocol].getName)
       .config(CodegenCacheKey, CodegenCacheEntries.toString)
-    LocalDataFs.Bindings.foldLeft(b) { case (b, (k, v)) => b.config(s"spark.hadoop.$k", v) }
+    (runtimeSettings(shufflePartitions) ++
+      LocalDataFs.Bindings.map { case (k, v) => s"spark.hadoop.$k" -> v })
+      .foldLeft(b) { case (b, (k, v)) => b.config(k, v) }
   }
 
   /** Settings applied when reusing an externally created session — the
-    * full RUNTIME-SETTABLE set the builder configures (a session missing
-    * the extension registrations lacks every graft SQL function; UTC
+    * builder's [[runtimeSettings]] and extensions (a session missing the
+    * extension registrations lacks every graft SQL function; UTC
     * makes the TIMESTAMP_NTZ→TIMESTAMP cast in SparkEntry.tsMicros
     * instant-exact; AQE + right-sized shuffle parallelism keep plans
     * identical to builder-created sessions — the host's default 200
@@ -71,13 +80,7 @@ object GraftSession {
     * [[unmetSettings]]).
     */
   def configure(spark: SparkSession, shufflePartitions: Int = 32): SparkSession = {
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set(ManifestCommitProtocol.ProtocolClassKey, classOf[ManifestCommitProtocol].getName)
+    runtimeSettings(shufflePartitions).foreach { case (k, v) => spark.conf.set(k, v) }
     val hc = spark.sparkContext.hadoopConfiguration
     LocalDataFs.Bindings.foreach { case (k, v) => hc.set(k, v) }
     // builds the bound class when no `file:` instance is cached yet; an

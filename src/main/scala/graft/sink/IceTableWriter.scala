@@ -243,9 +243,10 @@ object IceTableWriter {
         * for INGEST-shaped writes, where one batch minting thousands of
         * partitions means the spec is wrong. */
       warnFanout: Boolean = true): Seq[FileEntry] = {
-    val meta = table.meta
-    val schema = table.schema
-    val schemaVersion = table.currentSchemaVersion
+    // the files are stamped with the version whose schema they were projected to
+    val st = table.resolve()
+    val meta = st.meta
+    val schema = st.schema
     ManifestCommitProtocol.requireInstalled(df.sparkSession)
     val outDir = s"${table.dir}/data/${java.util.UUID.randomUUID()}"
     markStaging(outDir) // gc skips this dir until publish clears the marker
@@ -361,7 +362,7 @@ object IceTableWriter {
       FileEntry(
         path = f.path,
         rows = f.stats.rows,
-        schemaVersion = schemaVersion,
+        schemaVersion = st.currentVersion,
         partition = partitionValues(f.partitionDir, transforms),
         bytes = f.stats.bytes,
         min = f.stats.min,
@@ -394,16 +395,16 @@ object IceTableWriter {
 
   private def writeDeleteFiles(keysDf: DataFrame, table: IceTable): Seq[FileEntry] = {
     ManifestCommitProtocol.requireInstalled(keysDf.sparkSession)
-    val meta = table.meta
+    val st = table.resolve()
     val outDir = s"${table.dir}/deletes/${java.util.UUID.randomUUID()}"
     markStaging(outDir)
-    val written = ManifestCommitProtocol.save(keysDf.write.format(meta.format).mode("append"), outDir)
+    val written = ManifestCommitProtocol.save(keysDf.write.format(st.meta.format).mode("append"), outDir)
     // same zero-row unstaging as writeFiles: an empty delete side stages
     // an eager empty part file that would burden every later read's
     // anti-join planning for nothing
     unstageEmpty(written, outDir).map { f =>
-      FileEntry(f.path, f.stats.rows, table.currentSchemaVersion,
-        bytes = f.stats.bytes, format = meta.format)
+      FileEntry(f.path, f.stats.rows, st.currentVersion,
+        bytes = f.stats.bytes, format = st.meta.format)
     }
   }
 

@@ -82,11 +82,12 @@ final case class TableMeta(
   * }}}
   *
   * Scale design: reads are planned from metadata — per-file partition
-  * values allow partition pruning before any file is opened, the
-  * seq-number of every file rides in via a broadcast join against
-  * `input_file_name()` (no per-commit union explosion), and equality
+  * values allow partition pruning before any file is opened, a row that
+  * needs its file's seq-number takes it from a broadcast path → seq map
+  * inside the scan (no join, no per-commit union explosion), and equality
   * deletes are applied with a single (broadcast when small) null-safe
-  * anti-join.
+  * anti-join. One operation reads the table's metadata once
+  * ([[IceTable.State]]).
   */
 final class IceTable private[table] (
     /** table root — a Hadoop-resolvable path/URI string (plain local
@@ -103,36 +104,15 @@ final class IceTable private[table] (
 
   val log = new CommitLog(s"$dir/_commits/$branch")
 
-  /** mtime-validated cache for [[rawMeta]]: a scan otherwise reads and
-    * parses table.json several times (data-side readAligned, delete-side
-    * readAligned, idColumns via meta). One stat per access replaces the
-    * read+parse; an external props/format update bumps the mtime and
-    * invalidates. (Two updates inside one mtime tick could serve the
-    * first briefly — table.json writes are rare creation/evolution
-    * events, and every load-bearing decision re-reads via the commit
-    * log, so the window is harmless.)
-    */
-  @volatile private var metaCache: (Long, TableMeta) = null
-
   /** Persisted table metadata, no write-time overlay applied. */
   private def rawMeta: TableMeta = {
     val p = s"$dir/table.json"
-    val st = ControlFs.status(p).getOrElse(
+    val bytes = ControlFs.readSmallBytes(p).getOrElse(
       throw new java.io.FileNotFoundException(s"not an IceTable: $p missing"))
-    val mt = st.getModificationTime
-    val c = metaCache
-    if (c != null && c._1 == mt) c._2
-    else {
-      val bytes = ControlFs.readSmallBytes(p).getOrElse(
-        throw new java.io.FileNotFoundException(p))
-      val m = CommitLog.mapper.readValue(bytes, classOf[TableMeta])
-      metaCache = (mt, m)
-      m
-    }
+    CommitLog.mapper.readValue(bytes, classOf[TableMeta])
   }
 
-  def meta: TableMeta = {
-    val m = rawMeta
+  private def overlaid(m: TableMeta): TableMeta =
     if (writeOverlay.isEmpty) m
     else
       m.copy(
@@ -143,6 +123,13 @@ final class IceTable private[table] (
         // records the format it was written with, so reads stay correct
         // on tables that mix formats across commits.
         format = writeOverlay.getOrElse("write.format.default", m.format))
+
+  def meta: TableMeta = overlaid(rawMeta)
+
+  /** table.json and the schema versions, read once per operation. */
+  private[graft] def resolve(): IceTable.State = {
+    val m = rawMeta
+    IceTable.State(overlaid(m), m.format, schemaVersions)
   }
 
   /** View of this table with `overlay` merged over its properties for all
@@ -193,8 +180,7 @@ final class IceTable private[table] (
 
   def currentSchemaVersion: Int = schemaVersions.last._1
   def schema: StructType = schemaVersions.last._2
-  def schemaAt(version: Int): StructType =
-    schemaVersions.find(_._1 == version).map(_._2).getOrElse(schema)
+  def schemaAt(version: Int): StructType = resolve().schemaAt(version)
 
   /** Commit a new schema version (E2). Create-exclusive claim on the
     * Hadoop FS layer with read-back arbitration (same protocol as
@@ -258,7 +244,8 @@ final class IceTable private[table] (
       maxSeq: Option[Long] = None,
       filePred: Option[FileEntry => Boolean] = None
   ): DataFrame = {
-    val cur = schema
+    val st = resolve()
+    val cur = st.schema
     // ONE commit-log pass per scan: planning and delete attribution both
     // derive from the same fetched chain (commits() pays a checkpoint +
     // tail deserialization — reading it twice per query doubled the
@@ -273,11 +260,21 @@ final class IceTable private[table] (
     val liveFrom = liveChain(all0).headOption.map(_.seq).getOrElse(Long.MinValue)
     val delFiles = firstListedDeletes(all0).filter { case (_, s) => s >= liveFrom }
 
-    if (dataFiles.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], cur)
+    if (dataFiles.isEmpty) return spark.createDataFrame(Seq.empty[Row].asJava, cur)
+    readLive(spark, st, dataFiles, delFiles)
+  }
 
-    val data = readAligned(spark, dataFiles, cur, v => schemaAt(v))
-    applyEqualityDeletes(spark, data, delFiles, cur).drop(SEQ)
+  /** `files` at the current schema with `delFiles`' equality deletes
+    * applied. The seq column is attached only when there are deletes to
+    * order by it, and is not returned. */
+  private def readLive(
+      spark: SparkSession,
+      st: IceTable.State,
+      files: Seq[(FileEntry, Long)],
+      delFiles: Seq[(FileEntry, Long)]): DataFrame = {
+    val withSeq = delFiles.nonEmpty && st.meta.idColumns.nonEmpty
+    val data = readAligned(spark, st, files, st.schema, st.schemaAt, withSeq)
+    if (withSeq) applyEqualityDeletes(spark, st, data, delFiles, st.schema).drop(SEQ) else data
   }
 
   /** Anti-join `data` (carrying [[IceTable.SEQ]]) against equality-delete
@@ -287,20 +284,23 @@ final class IceTable private[table] (
     * of fat keys can blow the broadcast limit), bytes don't. Entries
     * without recorded sizes (pre-stats commits) estimate from their row
     * count, so a legacy 50M-row delete file still shuffles; entries with
-    * neither get a conservative per-file constant.
+    * neither get a conservative per-file constant. The choice is a hint
+    * either way: left alone, the engine sizes the delete scan from its
+    * files' on-disk bytes and would broadcast the wide-key case anyway.
     */
   private def applyEqualityDeletes(
       spark: SparkSession,
+      st: IceTable.State,
       data: DataFrame,
       delFiles: Seq[(FileEntry, Long)],
       cur: StructType): DataFrame = {
-    val keyCols = meta.idColumns
+    val keyCols = st.meta.idColumns
     if (delFiles.isEmpty || keyCols.isEmpty) return data
     val keySchema = StructType(cur.fields.filter(f => keyCols.contains(f.name)))
-    val dels = readAligned(spark, delFiles, keySchema, v => keyProjection(schemaAt(v), keyCols))
+    val dels = readAligned(spark, st, delFiles, keySchema, v => keyProjection(st.schemaAt(v), keyCols))
     val delBytes = delFiles.map { case (f, _) => IceTable.deleteSideBytes(f) }.sum
     val rhs0 = dels.withColumnRenamed(SEQ, "__graft_dseq")
-    val rhs = if (delBytes < IceTable.DeleteBroadcastBytes) broadcast(rhs0) else rhs0
+    val rhs = if (delBytes < IceTable.DeleteBroadcastBytes) broadcast(rhs0) else rhs0.hint("merge")
     val cond = keyCols
       .map(k => data(k) <=> rhs(k))
       .reduce(_ && _) && rhs("__graft_dseq") > data(SEQ)
@@ -324,7 +324,7 @@ final class IceTable private[table] (
     */
   def readIncremental(spark: SparkSession, fromSeq: Long, toSeq: Long): DataFrame = {
     require(fromSeq <= toSeq, s"readIncremental: fromSeq $fromSeq > toSeq $toSeq")
-    val cur = schema
+    val st = resolve()
     val nonCompaction = log.commits()
       .filterNot(c => c.props.keys.exists(_.startsWith("compaction")))
     // window files are read as committed, even if a LATER rewrite
@@ -338,15 +338,13 @@ final class IceTable private[table] (
     // window data.
     val dataFiles = firstListed(nonCompaction)
       .filter { case (_, s) => s > fromSeq && s <= toSeq }
-    if (dataFiles.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], cur)
-    val data = readAligned(spark, dataFiles, cur, v => schemaAt(v))
+    if (dataFiles.isEmpty) return spark.createDataFrame(Seq.empty[Row].asJava, st.schema)
     // same global-first attribution for deletes: a delete file REPLAYED
     // into the window (first listed before it) already took effect and
     // must not re-apply at the replay's seq
     val delFiles = firstListedDeletes(nonCompaction)
       .filter { case (_, s) => s > fromSeq && s <= toSeq }
-    applyEqualityDeletes(spark, data, delFiles, cur).drop(SEQ)
+    readLive(spark, st, dataFiles, delFiles)
   }
 
   /** Change data feed (Iceberg changelog-scan / Delta CDF analogue): the
@@ -365,18 +363,19 @@ final class IceTable private[table] (
     */
   def readChanges(spark: SparkSession, fromSeq: Long, toSeq: Long): DataFrame = {
     require(fromSeq <= toSeq, s"readChanges: fromSeq $fromSeq > toSeq $toSeq")
-    val cur = schema
+    val st = resolve()
+    val cur = st.schema
     val all = log.commits()
     val nonCompaction =
       all.filterNot(c => c.props.keys.exists(_.startsWith("compaction")))
     val window = nonCompaction.filter(c => c.seq > fromSeq && c.seq <= toSeq)
-    val keyCols = meta.idColumns
+    val keyCols = st.meta.idColumns
     // global-first attribution (K7): replayed listings are not inserts
     val dataFiles = firstListed(nonCompaction)
       .filter { case (_, s) => s > fromSeq && s <= toSeq }
     val inserts =
       if (dataFiles.isEmpty) None
-      else Some(readAligned(spark, dataFiles, cur, v => schemaAt(v))
+      else Some(readAligned(spark, st, dataFiles, cur, st.schemaAt)
         .withColumn("_change_type", lit("insert")))
     // global-first attribution (K7) for the delete arm too: a replayed
     // delete file is not a new delete event
@@ -386,7 +385,7 @@ final class IceTable private[table] (
       if (delFiles.isEmpty || keyCols.isEmpty) None
       else {
         val keySchema = StructType(cur.fields.filter(f => keyCols.contains(f.name)))
-        val keys = readAligned(spark, delFiles, keySchema, v => keyProjection(schemaAt(v), keyCols))
+        val keys = readAligned(spark, st, delFiles, keySchema, v => keyProjection(st.schemaAt(v), keyCols))
         val widened: Seq[Column] = cur.fields.toSeq.map { f =>
           if (keyCols.contains(f.name)) col(f.name)
           else lit(null).cast(f.dataType).as(f.name)
@@ -414,12 +413,12 @@ final class IceTable private[table] (
         val files = c.removedPaths.flatMap(p => byPath.get(IceTable.normalizePath(p)))
         if (files.isEmpty) None
         else {
-          val raw = readAligned(spark, files, cur, v => schemaAt(v))
+          val raw = readAligned(spark, st, files, cur, st.schemaAt)
           // first-listing seqs here too: a replayed delete listing between
           // the original append and the overwrite must not retract rows
           // that were live at the ORIGINAL delete's seq
           val preDels = firstListedDeletes(all).filter { case (_, s) => s <= c.seq }
-          Some(applyEqualityDeletes(spark, raw, preDels, cur)
+          Some(applyEqualityDeletes(spark, st, raw, preDels, cur)
             .withColumn(SEQ, lit(c.seq))
             .withColumn("_change_type", lit("delete")))
         }
@@ -428,7 +427,7 @@ final class IceTable private[table] (
       org.apache.spark.sql.types.StructField("_change_type", org.apache.spark.sql.types.StringType) :+
       org.apache.spark.sql.types.StructField("_commit_seq", org.apache.spark.sql.types.LongType))
     (inserts.toSeq ++ deletes.toSeq ++ retractions) match {
-      case Nil => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], outSchema)
+      case Nil => spark.createDataFrame(Seq.empty[Row].asJava, outSchema)
       case parts => parts.reduce(_.unionByName(_))
         .select(cur.fieldNames.toIndexedSeq.map(col) :+
           col("_change_type") :+ col(SEQ).as("_commit_seq"): _*)
@@ -438,9 +437,8 @@ final class IceTable private[table] (
   /** K7 cross-envelope replay guard: attribute each data-file path to
     * the FIRST commit (in seq order) that listed it. A later commit
     * re-listing the same path is a replayed envelope, not new data —
-    * counting it again would duplicate the file's rows, and the
-    * seq-attach join in [[readAligned]] would MULTIPLY them (file read
-    * once per listing × one join row per listing). Within-commit
+    * counting it again would duplicate the file's rows (the scan reads a
+    * path once per listing). Within-commit
     * duplicates are already dropped by the commit builder
     * ([[CommitLog.commit]]); this is the across-commits arm
     * (`channel/Deduplicated.java:79-148` dedups both).
@@ -491,10 +489,6 @@ final class IceTable private[table] (
     if (lastRewrite >= 0) all0.drop(lastRewrite) else all0
   }
 
-  /** Live commit chain at `maxSeq`. */
-  private def liveCommits(maxSeq: Option[Long]): Seq[Commit] =
-    liveChain(commitsUpTo(maxSeq))
-
   /** Metadata-level file planning: partition-value pruning plus optional
     * per-file predicates over the recorded stats (row counts, byte sizes,
     * column min/max bounds) — files failing either are never opened.
@@ -534,43 +528,29 @@ final class IceTable private[table] (
 
   /** Read a set of (file, seq) entries, grouped by the schema version they
     * were written with, align each group to `target` (cast widened types,
-    * null-fill added columns), and attach the owning commit's sequence
-    * number via a broadcast `input_file_name()` join.
+    * null-fill added columns), and, `withSeq`, attach the owning commit's
+    * sequence number inside the scan ([[IceTable.seqLookup]]).
     */
   private def readAligned(
       spark: SparkSession,
+      st: IceTable.State,
       files: Seq[(FileEntry, Long)],
       target: StructType,
-      versionSchema: Int => StructType
+      versionSchema: Int => StructType,
+      withSeq: Boolean = true
   ): DataFrame = {
     // per-file format, falling back to the PERSISTED table format for
     // entries that predate per-file recording — never the write-props
     // overlay, which must not re-type files that already exist
-    val legacyFmt = rawMeta.format
-    def fmtOf(f: FileEntry): String = if (f.format.nonEmpty) f.format else legacyFmt
+    def fmtOf(f: FileEntry): String = if (f.format.nonEmpty) f.format else st.legacyFormat
+    // keyed as the scan reports a path: URI-encoded (space → %20, % →
+    // %25, via Path.toUri), scheme stripped
+    lazy val seqOf = IceTable.seqLookup(spark, files.map { case (f, s) =>
+      IceTable.normalizePath(new org.apache.hadoop.fs.Path(f.path).toUri.toString) -> s }.toMap)
     val groups = files.groupBy(e => (e._1.schemaVersion, fmtOf(e._1))).toSeq.sortBy(_._1)
     val parts = groups.map { case ((ver, fmt), entries) =>
       val written = versionSchema(ver)
       val df = spark.read.schema(written).format(fmt).load(entries.map(_._1.path): _*)
-      // key by the URI-ENCODED path: input_file_name() returns the scan's
-      // URL-encoded file path (space → %20, % → %25, via Path.toUri), so
-      // the metadata side must encode the same way or the inner join
-      // silently drops every row of a file whose path needs encoding
-      val seqRows = entries.map { case (f, s) =>
-        Row(IceTable.normalizePath(new org.apache.hadoop.fs.Path(f.path).toUri.toString), s)
-      }
-      val seqDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(seqRows, 1),
-        StructType(Seq(
-          org.apache.spark.sql.types.StructField("__graft_file", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField(SEQ, org.apache.spark.sql.types.LongType)
-        ))
-      )
-      val withSeq = df
-        .withColumn("__graft_file",
-          regexp_replace(input_file_name(), IceTable.SchemePrefixRegex, "/"))
-        .join(broadcast(seqDf), Seq("__graft_file"))
-        .drop("__graft_file")
       // align to target schema — the coercion kernel, not a bare cast:
       // it rebuilds structs field-wise (null-filling fields added by
       // evolution, including inside array elements / map values, which
@@ -580,8 +560,9 @@ final class IceTable private[table] (
           case Some(w) => graft.operators.Coercion.coerce(col(f.name), w.dataType, f.dataType).as(f.name)
           case None    => lit(null).cast(f.dataType).as(f.name)
         }
-      } :+ col(SEQ)
-      withSeq.select(cols: _*)
+      }
+      val seq = if (withSeq) Seq(seqOf(df.metadataColumn("_metadata").getField("file_path")).as(SEQ)) else Nil
+      df.select(cols ++ seq: _*)
     }
     parts.reduce(_.unionByName(_))
   }
@@ -596,7 +577,6 @@ final class IceTable private[table] (
     * appends `append`.
     */
   def snapshots(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
     val rows = log.commits().map { c =>
       // partition overwrites supersede live rows without delete files —
       // Iceberg labels them 'overwrite' too; only labeling delete-carrying
@@ -615,19 +595,11 @@ final class IceTable private[table] (
         c.deleteFiles.size.toLong, c.removedPaths.size.toLong,
         c.vtts.map(long2Long).orNull)
     }
-    val schema = StructType(Seq(
-      StructField("seq", LongType, nullable = false),
-      StructField("batch_id", LongType, nullable = false),
-      StructField("commit_id", StringType, nullable = false),
-      StructField("committed_at_ms", LongType, nullable = false),
-      StructField("operation", StringType, nullable = false),
-      StructField("added_files", LongType, nullable = false),
-      StructField("added_rows", LongType, nullable = false),
-      StructField("added_bytes", LongType, nullable = false),
-      StructField("delete_files", LongType, nullable = false),
-      StructField("removed_files", LongType, nullable = false),
-      StructField("vtts_us", LongType, nullable = true)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    spark.createDataFrame(rows.asJava, StructType.fromDDL(
+      "seq BIGINT NOT NULL, batch_id BIGINT NOT NULL, commit_id STRING NOT NULL, " +
+        "committed_at_ms BIGINT NOT NULL, operation STRING NOT NULL, added_files BIGINT NOT NULL, " +
+        "added_rows BIGINT NOT NULL, added_bytes BIGINT NOT NULL, delete_files BIGINT NOT NULL, " +
+        "removed_files BIGINT NOT NULL, vtts_us BIGINT"))
   }
 
   /** Iceberg `files`-metadata-table analogue: one row per LIVE data file
@@ -638,22 +610,16 @@ final class IceTable private[table] (
     * coverage) without touching any data file.
     */
   def filesMeta(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
+    val legacyFmt = rawMeta.format
     val rows = planFiles(None).map { case (f, seq) =>
       Row(f.path, seq, f.rows, f.bytes,
-        if (f.format.nonEmpty) f.format else rawMeta.format,
+        if (f.format.nonEmpty) f.format else legacyFmt,
         f.partition, f.min, f.max)
     }
-    val schema = StructType(Seq(
-      StructField("file_path", StringType, nullable = false),
-      StructField("seq", LongType, nullable = false),
-      StructField("rows", LongType, nullable = false),
-      StructField("bytes", LongType, nullable = false),
-      StructField("format", StringType, nullable = false),
-      StructField("partition", MapType(StringType, StringType), nullable = false),
-      StructField("lower_bounds", MapType(StringType, StringType), nullable = false),
-      StructField("upper_bounds", MapType(StringType, StringType), nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    spark.createDataFrame(rows.asJava, StructType.fromDDL(
+      "file_path STRING NOT NULL, seq BIGINT NOT NULL, rows BIGINT NOT NULL, bytes BIGINT NOT NULL, " +
+        "format STRING NOT NULL, partition MAP<STRING, STRING> NOT NULL, " +
+        "lower_bounds MAP<STRING, STRING> NOT NULL, upper_bounds MAP<STRING, STRING> NOT NULL"))
   }
 
   /** Iceberg `partitions`-metadata-table analogue: [[filesMeta]] rolled
@@ -900,22 +866,24 @@ final class IceTable private[table] (
     // and takes the full-compact path, which applies deletes and has its
     // own bounded conflict loop)
     withConflictRetry { scanSeq =>
-      val hasLiveDeletes = meta.idColumns.nonEmpty &&
-        liveCommits(None).exists(_.deleteFiles.nonEmpty)
+      // one metadata read and one commit-log pass per attempt
+      val st = resolve()
+      val all = log.commits()
+      val hasLiveDeletes = st.meta.idColumns.nonEmpty &&
+        liveChain(all).exists(_.deleteFiles.nonEmpty)
       if (hasLiveDeletes) {
-        val rewritten = planFiles(None).size
+        val rewritten = planFrom(all, None, None).size
         compact(spark)
         rewritten
       } else {
-        val small = planFiles(None, filePred =
+        val small = planFrom(all, None,
           Some(f => f.bytes >= 0 && f.bytes < targetFileBytes))
         // isEmpty guard is separate from the minInputFiles threshold: a caller
         // passing minInputFiles <= 0 must still no-op (readAligned on zero
         // files would reduce over an empty group list)
         if (small.isEmpty || small.size < minInputFiles) 0
         else {
-          val cur = schema
-          val df = readAligned(spark, small, cur, v => schemaAt(v)).drop(IceTable.SEQ)
+          val df = readAligned(spark, st, small, st.schema, st.schemaAt, withSeq = false)
           val totalBytes = small.map(_._1.bytes).sum
           val outParts = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
           graft.sink.IceTableWriter.rewrite(
@@ -945,9 +913,8 @@ final class IceTable private[table] (
     * warehouse.
     */
   def fsck(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
     val legacyFsckFmt = rawMeta.format
-    val live = liveCommits(None)
+    val live = liveChain(log.commits())
     val removed = live.flatMap(_.removedPaths).map(IceTable.normalizePath).toSet
     val entries: Seq[(FileEntry, Long, String)] =
       live.flatMap(c =>
@@ -990,14 +957,9 @@ final class IceTable private[table] (
           }
       }
     }
-    val problems = problemList.asScala.toSeq
-    val schema = StructType(Seq(
-      StructField("file_path", StringType, nullable = false),
-      StructField("seq", LongType, nullable = false),
-      StructField("kind", StringType, nullable = false),
-      StructField("problem", StringType, nullable = false),
-      StructField("detail", StringType, nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(problems, 1), schema)
+    spark.createDataFrame(new java.util.ArrayList(problemList), StructType.fromDDL(
+      "file_path STRING NOT NULL, seq BIGINT NOT NULL, kind STRING NOT NULL, " +
+        "problem STRING NOT NULL, detail STRING NOT NULL"))
   }
 
   /** Remove data/delete files no branch can still reach (i.e. referenced
@@ -1110,16 +1072,46 @@ object IceTable {
     else if (f.rows >= 0) f.rows * EstimatedDeleteRowBytes
     else UnknownDeleteFileBytes
 
-  /** `input_file_name()` form → metadata form: strip any URI scheme
-    * (and its slashes) down to one leading slash, so `file:///x`,
-    * `file:/x`, `graftfs:/x`, and a plain `/x` all key identically.
-    * (An authority, when present — `hdfs://nn:8020/x` — survives as a
-    * path segment on BOTH sides, so the keys still agree.)
+  /** Strip any URI scheme (and its slashes) down to one leading slash,
+    * so `file:///x`, `file:/x`, `graftfs:/x`, and a plain `/x` all key
+    * identically. (An authority, when present — `hdfs://nn:8020/x` —
+    * survives as a path segment on BOTH sides, so the keys still agree.)
     */
-  private[table] val SchemePrefixRegex = "^[a-zA-Z][a-zA-Z0-9+.-]*:/+"
+  private val SchemePrefixRegex = "^[a-zA-Z][a-zA-Z0-9+.-]*:/+"
 
   private[graft] def normalizePath(p: String): String =
     p.replaceFirst(SchemePrefixRegex, "/")
+
+  /** Maps a scanned file path to its commit seq. `seqs` reaches each
+    * executor once, as a broadcast variable (not in every task's
+    * closure); Spark's context cleaner frees it with the plan. A path
+    * missing from the map fails the read: its rows would have no seq to
+    * order against equality deletes.
+    */
+  private[table] def seqLookup(spark: SparkSession, seqs: Map[String, Long]): Column => Column = {
+    val bc = spark.sparkContext.broadcast(seqs)
+    val lookup = udf { (path: String) =>
+      bc.value.getOrElse(path, throw new IllegalStateException(
+        s"scanned file $path is not in the table's planned file set, so its rows have no commit seq"))
+    }
+    path => lookup(regexp_replace(path, SchemePrefixRegex, "/"))
+  }
+
+  /** One operation's read of a table's metadata ([[IceTable.resolve]]):
+    * `meta` with the write overlay applied, `legacyFormat` the persisted
+    * format (the fallback for entries without a per-file format), and
+    * the schema versions in version order.
+    */
+  private[graft] final case class State(
+      meta: TableMeta,
+      legacyFormat: String,
+      versions: Seq[(Int, StructType)]) {
+    def schema: StructType = versions.last._2
+    def currentVersion: Int = versions.last._1
+    /** a burned version number (see [[IceTable.evolveTo]]) reads as the current schema */
+    def schemaAt(version: Int): StructType =
+      versions.collectFirst { case (`version`, s) => s }.getOrElse(schema)
+  }
 
   def exists(dir: String): Boolean = ControlFs.exists(s"$dir/table.json")
 

@@ -173,4 +173,16 @@ class LocalDataFsSuite extends AnyFunSuite {
       FileSystem.get(URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
         .getClass.getName).isEmpty)
   }
+
+  test("a builder session and a plain session after configure agree on every runtime setting") {
+    val keys = GraftSession.runtimeSettings(shufflePartitions = 8).map(_._1)
+    // a new session shares the context but not the SQL conf; unset, each
+    // key falls back to Spark's own default
+    val plain = spark.newSession()
+    keys.foreach(plain.conf.unset)
+    assert(keys.exists(k => plain.conf.getOption(k) != spark.conf.getOption(k)),
+      "the plain session must start from Spark's defaults")
+    GraftSession.configure(plain, shufflePartitions = 8)
+    for (k <- keys) assert(plain.conf.getOption(k) === spark.conf.getOption(k), k)
+  }
 }

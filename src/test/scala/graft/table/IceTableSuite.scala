@@ -185,8 +185,8 @@ class IceTableSuite extends AnyFunSuite {
   }
 
   test("paths needing URI encoding (space in warehouse dir) read back every row") {
-    // input_file_name() returns the URL-encoded path: a raw-path join key
-    // silently dropped all rows of such files (regression test)
+    // the scan reports the URL-encoded path: a raw-path seq key silently
+    // dropped all rows of such files (regression test)
     val base = TestSpark.freshDir("t-space")
     val dir = s"$base/ware house/t"
     val t = IceTable.create(dir, schema, TableMeta(idColumns = Seq("id")))
@@ -194,6 +194,74 @@ class IceTableSuite extends AnyFunSuite {
     IceTableWriter.delta(spark, df((2L, "b2", 2.2)), Seq(2L).toDF("id"), t, 1)
     val got = t.read(spark).orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(got === Seq((1L, "a"), (2L, "b2")))
+  }
+
+  test("a read is one scan: seqs ride the file scan, the table's metadata is read once") {
+    // bucket(id,4) over 3 schema versions and 4 commits: 16 files in 3
+    // (version, format) groups, no delete files
+    val dir = TestSpark.freshDir("t-onescan")
+    val v1 = StructType(Seq(StructField("id", LongType), StructField("name", StringType)))
+    val v2 = v1.add("v", DoubleType)
+    val v3 = v2.add("tag", StringType)
+    val t = IceTable.create(dir, v1, TableMeta(partitionBy = Seq("bucket(id,4)")))
+    def ids(batch: Int) = (0L until 64L).map(_ + 1000L * batch)
+    IceTableWriter.append(spark, ids(0).map(i => (i, s"n$i")).toDF("id", "name"), t, 0)
+    t.evolveTo(v2)
+    IceTableWriter.append(spark, ids(1).map(i => (i, s"n$i", i * 0.5)).toDF("id", "name", "v"), t, 1)
+    t.evolveTo(v3)
+    for (b <- 2 to 3)
+      IceTableWriter.append(spark,
+        ids(b).map(i => (i, s"n$i", i * 0.5, s"t$b")).toDF("id", "name", "v", "tag"), t, b)
+    assert(t.schemaVersions.map(_._1) === Seq(1, 2, 3))
+    assert(t.log.commits().size === 4 && t.planFiles(None).size === 16)
+
+    val sc = spark.sparkContext
+    val tag = "graft.test.onescan"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(tag) != null) jobs.incrementAndGet()
+    }
+    // (result, Spark jobs run, control-plane op counts) of `body`
+    def measured[T](body: => T): (T, Int, Map[String, Long]) = {
+      jobs.set(0)
+      sc.setLocalProperty(tag, "1")
+      try {
+        val before = graft.fs.ControlFs.profileSnapshot()
+        val got = body
+        val after = graft.fs.ControlFs.profileSnapshot()
+        graft.streaming.DedupShellSuite.drainListenerBus(spark)
+        (got, jobs.get, after.map { case (op, (n, _)) => op -> (n - before.get(op).fold(0L)(_._1)) })
+      } finally sc.setLocalProperty(tag, null)
+    }
+    sc.addSparkListener(listener)
+    val ((got, scanJobs, fsOps), (changes, changeJobs, _)) =
+      try (measured(t.scan(spark, None).filter(col("id") % 2 === 0).collect()),
+        measured(t.readChanges(spark, 0L, 4L).select("id", "_commit_seq").as[(Long, Long)].collect()))
+      finally sc.removeSparkListener(listener)
+    assert(got.map(_.getAs[Long]("id")).sorted.toSeq === (0 to 3).flatMap(ids).filter(_ % 2 == 0))
+    assert(got.count(r => r.isNullAt(r.fieldIndex("tag"))) === 64, "v1/v2 rows null-fill the new column")
+    // no seq-attach join: the scan is the only job (a broadcast join ran
+    // one more job per version group)
+    assert(scanJobs === 1, s"a collect of one scan ran $scanJobs Spark jobs")
+    // one schema listing and one commit-log listing; table.json is read,
+    // not stat-ed per accessor
+    assert(fsOps.getOrElse("listNames", 0L) <= 2, s"control-plane ops of one read: $fsOps")
+    assert(fsOps.getOrElse("status", 0L) <= 1, s"control-plane ops of one read: $fsOps")
+    // a read that returns the seq still runs as one scan: batch b landed at seq b + 1
+    assert(changes.sorted.toSeq === (0 to 3).flatMap(b => ids(b).map(_ -> (b + 1L))))
+    assert(changeJobs === 1, s"a collect of one change read ran $changeJobs Spark jobs")
+  }
+
+  test("a scanned file missing from the seq map fails the read instead of dropping its rows") {
+    val path = "file:/w/data/part-0.parquet"
+    val seqOf = IceTable.seqLookup(spark, Map("/w/data/part-0.parquet" -> 7L))
+    assert(Seq(path).toDF("p").select(seqOf(col("p"))).as[Long].collect().toSeq === Seq(7L))
+    val e = intercept[Exception](
+      Seq(path, "file:///w/data/part-1.parquet").toDF("p").select(seqOf(col("p"))).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("/w/data/part-1.parquet is not in the table")),
+      s"no seq-lookup failure in: $e")
   }
 
   test("a zombie's duplicate batchId entry is dropped by readers (K8 self-heal)") {
@@ -1019,6 +1087,10 @@ class IceTableSuite extends AnyFunSuite {
         element_at(col("upper_bounds"), "id").cast("long"))
       .as[(Long, Long)].collect()
     assert(bounds.map(_._1).min === 1L && bounds.map(_._2).max === 2L)
+    // column nullability: only a snapshot's vtts may be null
+    assert(t.snapshots(spark).schema.filter(_.nullable).map(_.name) === Seq("vtts_us"))
+    assert(t.filesMeta(spark).schema.forall(!_.nullable) && t.fsck(spark).schema.forall(!_.nullable))
+    assert(t.fsck(spark).columns.toSeq === Seq("file_path", "seq", "kind", "problem", "detail"))
   }
 
   test("readIncremental returns only the window's added rows; rewrites are skipped") {
